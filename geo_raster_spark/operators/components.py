@@ -187,7 +187,7 @@ def cross_modal_pairs(docs: DataFrame, images: DataFrame,
 
     from pyspark import inheritable_thread_target
 
-    from .dedup import minhash_lsh, phash_pairs
+    from . import dedup
     corpus = cross_modal_corpus(docs, images, text_col, id_col,
                                 image_id_col, caption_col)
 
@@ -195,16 +195,16 @@ def cross_modal_pairs(docs: DataFrame, images: DataFrame,
     # materialization fences (persist+count) — run them concurrently so
     # one's fence latency back-fills the other's idle executors
     # (optimization guide §2.6; results are unioned after both finish, so
-    # output is unchanged).  inheritable_thread_target keeps job-group /
-    # local properties correct for driver threads.
+    # output is unchanged).  inheritable_thread_target(session) keeps the
+    # job tags and local properties of the calling thread.
     def _text_pairs():
-        return minhash_lsh(corpus, text_col="text", id_col="node_id", k=k,
-                           n_hashes=n_hashes, bands=bands,
-                           jaccard_threshold=jaccard_threshold,
-                           max_bucket=max_bucket)
+        return dedup.minhash_lsh(corpus, text_col="text", id_col="node_id",
+                                 k=k, n_hashes=n_hashes, bands=bands,
+                                 jaccard_threshold=jaccard_threshold,
+                                 max_bucket=max_bucket)
 
     def _image_pairs():
-        return phash_pairs(
+        return dedup.phash_pairs(
             images.select(
                 F.concat(F.lit("img:"), F.col(image_id_col).cast("string"))
                  .alias(image_id_col),
@@ -212,22 +212,22 @@ def cross_modal_pairs(docs: DataFrame, images: DataFrame,
             id_col=image_id_col, phash_col=phash_col,
             max_hamming=max_hamming, max_bucket=max_bucket)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        tp_f = pool.submit(inheritable_thread_target(_text_pairs))
-        ip_f = pool.submit(inheritable_thread_target(_image_pairs))
-        tp = tp_f.result()
-        ip = ip_f.result()
-    out = (tp.select("id_a", "id_b", F.lit("text").alias("source"))
-             .unionByName(
-                 ip.select("id_a", "id_b", F.lit("phash").alias("source")))
-             .dropDuplicates(["id_a", "id_b"])).persist()
-    out.count()
-    # the per-modality pair tables come back persisted — release them once
-    # the union is materialized, or every call leaks two cache entries for
-    # the session lifetime (review r7).  Callers unpersist() the result.
-    tp.unpersist()
-    ip.unpersist()
-    return out
+    spark = docs.sparkSession
+    with dedup._Fence() as fence:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [pool.submit(inheritable_thread_target(spark)(fn))
+                    for fn in (_text_pairs, _image_pairs)]
+        # the pool has waited for both: hand every result to the fence
+        # before raising either failure, so the sibling's persisted pairs
+        # are released too.  On success they are released once the union
+        # is materialized (review r7); callers unpersist() the result.
+        fence.adopt(*(f.result() for f in futs if f.exception() is None))
+        tp, ip = (f.result() for f in futs)
+        out = (tp.select("id_a", "id_b", F.lit("text").alias("source"))
+                 .unionByName(
+                     ip.select("id_a", "id_b", F.lit("phash").alias("source")))
+                 .dropDuplicates(["id_a", "id_b"]))
+        return fence.hold(out, out=True)
 
 
 def cross_modal_dedup(docs: DataFrame, images: DataFrame,
@@ -245,8 +245,9 @@ def cross_modal_dedup(docs: DataFrame, images: DataFrame,
         image_id_col=pair_kwargs.get("image_id_col", "image_id"),
         caption_col=pair_kwargs.get("caption_col", "caption"))
     pairs = cross_modal_pairs(docs, images, **pair_kwargs)
-    # connected_components eagerly checkpoints its edge input, so the
-    # persisted pair table can be released before survivor selection
+    # connected_components checkpoints its edge input lazily, and its
+    # first _sig job materializes that checkpoint — so the persisted pair
+    # table can be released before survivor selection
     comp = connected_components(pairs)
     pairs.unpersist()
     return dedup_corpus(corpus, pairs, id_col="node_id",

@@ -5,13 +5,20 @@ Four tiers, all shuffle-conscious:
 - ``exact_dedup``       content-hash groupBy (one shuffle on a 16-byte key)
 - ``minhash_lsh``       shingle -> minhash -> band -> bucket-join; candidate
                         pairs only form inside LSH buckets, never all-pairs.
-                        Entirely JVM-side: shingling via ``sequence`` +
-                        ``substring`` higher-order functions, hashing via
-                        ``xxhash64`` — no Python in the pipeline.
+                        Signatures come from one NumPy ``mapInPandas``
+                        kernel (``minhash_signatures_np``); banding, the
+                        bucket join and the Jaccard estimate run in the JVM.
 - ``simhash``           64-bit sign-of-weighted-votes fingerprint (Arrow
                         batch UDF), near-dups = Hamming distance <= t via
-                        bucket join on rotated prefixes.
+                        bucket join on pigeonhole blocks.
 - ``ngram_jaccard``     exact Jaccard verification on candidate pairs.
+
+Every bucket-join family (MinHash bands, SimHash/pHash blocks and the
+sign-LSH buckets of ``similarity.knn_pairs_exact``) pairs rows through one
+self-join, ``_bucket_self_join``, and takes and releases its caches through
+one ``_Fence``; a family adds only its own verification.  The persisted
+MinHash and pHash signature stores share one build / probe / admit /
+append path; their params sidecar tells the families apart.
 
 At 100 TB the only shuffles are groupBys on (band_id, band_hash) — bounded,
 well-distributed keys; pair verification joins stay within buckets.
@@ -19,10 +26,99 @@ well-distributed keys; pair verification joins stay within buckets.
 
 from __future__ import annotations
 
+from functools import reduce
+from typing import Callable, NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+class _Fence:
+    """The caches one operator call takes, released in one place.
+
+    ``hold`` persists a table and runs the one counting action that
+    materializes it: a lazily persisted self-join input is still
+    re-resolved per side when the join is planned (observed
+    nondeterminism until the cache exists).  A table the caller already
+    caches is used as it is and never released here — Spark has no
+    persist refcount, so unpersisting it would evict the caller's cache.
+    Leaving the ``with`` block releases every table held, except those
+    held with ``out=True`` (the call's results, handed to the caller);
+    an exception releases those too."""
+
+    def __init__(self):
+        self._tmp: list = []
+        self._out: list = []
+
+    def __enter__(self) -> "_Fence":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> bool:
+        for df in self._tmp + (self._out if exc_type else []):
+            df.unpersist()
+        return False
+
+    def hold(self, df: DataFrame, count: bool = True,
+             out: bool = False) -> DataFrame:
+        lvl = df.storageLevel
+        if not (lvl.useMemory or lvl.useDisk):
+            df = df.persist()
+            (self._out if out else self._tmp).append(df)
+        if count:
+            df.count()
+        return df
+
+    def adopt(self, *dfs: DataFrame) -> None:
+        """Release these already persisted tables with the call's own."""
+        self._tmp.extend(dfs)
+
+
+def _bucket_self_join(fence: _Fence, table: DataFrame, keys: list,
+                      carry: list, max_bucket: int | None) -> DataFrame:
+    """``(id_a, id_b, <c>_a, <c>_b for c in carry)`` for every two rows of
+    ``table`` (columns ``_id``, ``keys`` and ``carry``) that share a
+    bucket, with ``id_a < id_b``.  A pair sharing several buckets appears
+    once per bucket.
+
+    The table is held on ``fence``: materialized before the join is
+    planned, and released when the caller's ``with`` block ends — after
+    the caller has materialized its result — or when anything raises.
+
+    ``max_bucket`` drops larger buckets before the join, the standard
+    skew guard: an over-full bucket is boilerplate shared by thousands of
+    rows and would make the join quadratic, while its members still pair
+    through their other buckets.  The hot list is an aggregate plus a
+    BROADCAST anti-join, so the probe rows never shuffle just to be
+    counted; the list is tiny by definition."""
+    table = fence.hold(table)
+    if max_bucket is not None:
+        hot = (table.groupBy(*keys).count()
+                    .where(F.col("count") > max_bucket).select(*keys))
+        table = table.join(F.broadcast(hot), keys, "left_anti")
+    # qualified aliases: joining two renamed projections of the SAME plan
+    # hits Spark's ambiguous-attribute resolution, where both sides can
+    # silently bind to one — nondeterministically
+    ta, tb = table.alias("ta"), table.alias("tb")
+    return (ta.join(tb, _same_bucket("ta", "tb", keys)
+                    & (F.col("ta._id") < F.col("tb._id")))
+              .select(*_pair_cols("ta", "tb", carry)))
+
+
+def _same_bucket(left: str, right: str, keys: list) -> F.Column:
+    return reduce(lambda a, b: a & b,
+                  [F.col(f"{left}.{k}") == F.col(f"{right}.{k}")
+                   for k in keys])
+
+
+def _pair_cols(left: str, right: str, carry: list) -> list:
+    """``id_a``, ``id_b`` and ``<c>_a``, ``<c>_b`` from the two aliased
+    sides of a bucket join."""
+    return [F.col(f"{left}._id").alias("id_a"),
+            F.col(f"{right}._id").alias("id_b"),
+            *[F.col(f"{t}.{c}").alias(f"{c}_{side}") for c in carry
+              for t, side in ((left, "a"), (right, "b"))]]
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text",
@@ -49,61 +145,8 @@ def shingles(text_col: str, k: int = 5) -> F.Column:
     return F.transform(F.sequence(F.lit(1), n), lambda i: t.substr(i, F.lit(k)))
 
 
-# SplitMix64 constants (public mix function) as signed-long literals
-_SM_GAMMA = -7046029254386353131    # 0x9E3779B97F4A7C15
-_SM_M1 = -4658895280553007687       # 0xBF58476D1CE4E5B9
-_SM_M2 = -7723592293110705685       # 0x94D049BB133111EB
-
-
-def _sm_mix(z):
-    """SplitMix64 finalizer as wrapping long column math (ANSI off)."""
-    z = z.bitwiseXOR(F.shiftrightunsigned(z, 30)) * F.lit(_SM_M1)
-    z = z.bitwiseXOR(F.shiftrightunsigned(z, 27)) * F.lit(_SM_M2)
-    return z.bitwiseXOR(F.shiftrightunsigned(z, 31))
-
-
-def shingle_hashes(shingle_col):
-    """One xxhash64 pass over the shingles — the only string hashing."""
-    return F.transform(shingle_col, lambda sh: F.xxhash64(sh))
-
-
-def _km_signature(hashes_col, n_hashes: int):
-    """Length-``n_hashes`` minhash signature from a base-hash array via
-    Kirsch–Mitzenmacher double hashing: variant i of element hash h is
-    ``h1 + i * h2`` with ``h1 = h`` and ``h2 = splitmix(h) | 1`` (odd, so
-    every variant family is a full-period permutation of Z_2^64).
-
-    WHY KM (round 3): the round-2 family ``mix(h xor salt_i)`` derived all
-    variants from one mix of the same base — measured on sf0.1 documents it
-    left the per-slot argmins CORRELATED across salts, inflating est_jaccard
-    for non-dup pairs: 2831 candidate pairs of which only 256 were true
-    (precision 0.09).  KM double hashing, same cost, emits 299 with the
-    SAME 256 true pairs (precision 0.86).  See BENCH/IMPROVEMENTS.md.
-
-    Formulation: a single ``aggregate`` whose accumulator is the length-n
-    running-minimum array, merged per element via ``zip_with(least)`` over
-    a literal index array — one plan node, the hash array traversed once
-    (the n-transforms form took ~13 s of analysis/codegen in round 2)."""
-    idx = F.array(*[F.lit(i).cast("long") for i in range(n_hashes)])
-    init = F.array_repeat(F.lit(2 ** 63 - 1), n_hashes)
-    pairs = F.transform(hashes_col, lambda h: F.struct(
-        h.alias("h1"), _sm_mix(h).bitwiseOR(F.lit(1)).alias("h2")))
-    return F.aggregate(
-        pairs, init,
-        lambda acc, s: F.zip_with(
-            acc,
-            F.transform(idx, lambda i: s["h1"] + i * s["h2"]),
-            lambda a, b: F.least(a, b)))
-
-
-def minhash_signature(shingle_col, n_hashes: int = 32):
-    """Array of ``n_hashes`` min-hash values in ONE pass over the hashes
-    (xxhash64 base + KM double hashing — see ``_km_signature``)."""
-    return _km_signature(shingle_hashes(shingle_col), n_hashes)
-
-
 def _sm_mix_np(z: np.ndarray) -> np.ndarray:
-    """SplitMix64 finalizer on uint64 arrays (twin of ``_sm_mix``)."""
+    """SplitMix64 finalizer (public mix function) on uint64 arrays."""
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return z ^ (z >> np.uint64(31))
@@ -123,12 +166,6 @@ def _widened_id_type(simple: str, id_col: str, strict: bool = True) -> str:
     raise ValueError(
         f"id column {id_col!r} must be integral or string for the "
         f"signature store, got {simple}")
-
-
-def _widened_id_col(df: DataFrame, id_col: str) -> F.Column:
-    """``_id`` select expression at the store-stable widened type."""
-    t = _widened_id_type(df.schema[id_col].dataType.simpleString(), id_col)
-    return F.col(id_col).cast(t).alias("_id")
 
 
 def _check_store_id_type(spark, path: str, new_sig: DataFrame) -> None:
@@ -153,14 +190,16 @@ def minhash_signatures_np(docs: DataFrame, text_col: str = "text",
                           n_hashes: int = 32) -> DataFrame:
     """(_id, sig array<long>) via a NumPy mapInPandas kernel: sliding-window
     FNV-1a over the lowercased UTF-8 bytes + Kirsch–Mitzenmacher double
-    hashing (``h1 + i * h2``, ``h2 = splitmix(h1) | 1`` — see
-    ``_km_signature`` for why KM replaced the xor-salt family in round 3).
+    hashing (``h1 + i * h2``, ``h2 = splitmix(h1) | 1``, odd, so every
+    variant family is a full-period permutation of Z_2^64).
 
-    The A/B alternative to the interpreted-HOF pipeline (VERDICT r2 item 8
-    — see BENCH/IMPROVEMENTS.md).  Same KM family downstream; the BASE hash
-    differs (FNV-1a on byte windows vs JVM xxhash64 on char shingles), so
-    signatures are engine-specific — pairs/estimates are statistically
-    equivalent, not byte-equal.
+    WHY KM (round 3): the round-2 family ``mix(h xor salt_i)`` derived all
+    variants from one mix of the same base — measured on sf0.1 documents it
+    left the per-slot argmins CORRELATED across salts, inflating
+    est_jaccard for non-dup pairs: 2831 candidate pairs of which only 256
+    were true (precision 0.09).  KM double hashing, same cost, emits 299
+    with the SAME 256 true pairs (precision 0.86).  See
+    BENCH/IMPROVEMENTS.md.
 
     ``_id`` follows the input id type — STRING ids carry the namespaced
     ``doc:``/``img:`` nodes of ``cross_modal_pairs``; every INTEGRAL
@@ -247,7 +286,7 @@ def _km_sig_doc(text, k: int = 5, n_hashes: int = 32) -> np.ndarray:
 def minhash_lsh(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                 k: int = 5, n_hashes: int = 32, bands: int = 8,
                 jaccard_threshold: float = 0.6,
-                max_bucket: int = 200, engine: str = "numpy") -> DataFrame:
+                max_bucket: int = 200) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, est_jaccard) via banded MinHash.
 
     rows_per_band = n_hashes/bands; a pair collides if any band's slice of
@@ -255,44 +294,20 @@ def minhash_lsh(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     minhashes (unbiased estimator); filtered at ``jaccard_threshold``.
 
     ``max_bucket``: buckets larger than this are dropped before the pair
-    join — the standard skew guard at scale (an over-full bucket means
-    boilerplate shared by thousands of docs and would blow up the join
-    quadratically; its members still pair through their other bands).
+    join (see ``_bucket_self_join``).
 
-    ``engine``: ``"numpy"`` (default) = Arrow mapInPandas signatures
-    (``minhash_signatures_np``) — measured 2-3x faster than the interpreted
-    HOF pipeline at sf0.1 (BENCH/IMPROVEMENTS.md); ``"hof"`` = JVM
-    higher-order-function signatures (no Python workers needed).  Both use
-    KM double hashing; pairs are statistically equivalent, not byte-equal."""
-    r = n_hashes // bands
+    Signatures come from ``minhash_signatures_np``, an Arrow
+    ``mapInPandas`` kernel — measured 2-3x faster at sf0.1 than the JVM
+    higher-order-function pipeline it replaced (BENCH/IMPROVEMENTS.md)."""
     # Small inputs arrive as ONE parquet split, which would serialize the
-    # (interpreted, expensive) shingle-hash projection on a single core —
-    # spread the rows first.  At scale inputs already have many splits and
-    # this is a no-op.
+    # signature kernel on a single core — spread the rows first.  At scale
+    # inputs already have many splits and this is a no-op.
     par = docs.sparkSession.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
-    if engine == "numpy":
-        sig = minhash_signatures_np(docs, text_col, id_col, k, n_hashes)
-        return minhash_pairs_from_sig(sig, n_hashes, bands,
-                                      jaccard_threshold, max_bucket)
-    # Two-step materialization, both load-bearing:
-    # 1. the base shingle-hash array is persisted so the (interpreted,
-    #    expensive) string-hash pass runs ONCE — Catalyst's CollapseProject
-    #    would otherwise inline it into all n_hashes salted variants;
-    # 2. the signature table is persisted (inside minhash_pairs_from_sig)
-    #    before the self-join — signatures recomputed per join side are
-    #    wasteful AND self-joins of renamed un-materialized projections
-    #    have bitten us before (see git log).
-    hashed = docs.select(
-        F.col(id_col).alias("_id"),
-        shingle_hashes(shingles(text_col, k)).alias("_h")).persist()
-    sig = hashed.select(
-        "_id", _km_signature(F.col("_h"), n_hashes).alias("sig"))
-    out = minhash_pairs_from_sig(sig, n_hashes, bands, jaccard_threshold,
-                                 max_bucket)
-    hashed.unpersist()
-    return out
+    sig = minhash_signatures_np(docs, text_col, id_col, k, n_hashes)
+    return minhash_pairs_from_sig(sig, n_hashes, bands, jaccard_threshold,
+                                  max_bucket)
 
 
 def band_table(sig: DataFrame, n_hashes: int = 32,
@@ -319,75 +334,43 @@ def minhash_pairs_from_sig(sig: DataFrame, n_hashes: int = 32,
     precomputed signature table (columns ``_id``, ``sig array<long>``) —
     callable over a persisted signature artifact so an external oracle can
     re-run the same banding/join/estimate SQL-side (band buckets formed by
-    xxhash64 of the band tuple here ≡ grouping by the raw tuple there)."""
-    # persist only if the CALLER hasn't: Spark has no persist refcounting,
-    # so unpersisting a caller-cached input here would silently evict
-    # their cache (incremental_minhash_pairs passes an already-persisted
-    # batch signature table it keeps using afterwards)
-    lvl = sig.storageLevel
-    sig_owned = not (lvl.useMemory or lvl.useDisk)
-    if sig_owned:
-        sig = sig.persist()
+    xxhash64 of the band tuple here ≡ grouping by the raw tuple there).
 
-    bands_df = band_table(sig, n_hashes, bands).persist()
-    bands_cached = bands_df   # keep the persisted handle (bands_df is
-    #                           reassigned by the skew filter below)
+    The result comes back materialized and persisted, so the intermediate
+    caches are released here; callers owning long sessions may
+    ``unpersist()`` it when done."""
+    with _Fence() as fence:
+        # no counting action of its own: the band table's count scans every
+        # sig partition, so it fills this cache too (a separate sig.count()
+        # job was measured at ~0.4 s of pure latency per call, round 8)
+        sig = fence.hold(sig, count=False)
+        # ids travel through the bucket join; signatures re-attach by id
+        pairs = _bucket_self_join(fence, band_table(sig, n_hashes, bands),
+                                  ["band_id", "band_hash"], [], max_bucket
+                                  ).dropDuplicates(["id_a", "id_b"])
+        out = (pairs.join(_sig_side(sig, "a"), "id_a")
+                    .join(_sig_side(sig, "b"), "id_b")
+                    .withColumn("est_jaccard", _est_jaccard(n_hashes))
+                    .where(F.col("est_jaccard") >= jaccard_threshold)
+                    .select("id_a", "id_b",
+                            F.round("est_jaccard", 6).alias("est_jaccard")))
+        return fence.hold(out, out=True)
 
-    # force materialization NOW: a lazily-persisted self-join input is
-    # still re-resolved per side at analysis time (observed nondeterminism
-    # persists until the cache actually exists before the join is planned).
-    # ONE job materializes both caches — bands_df scans every sig partition,
-    # so counting it fills sig's cache too (the separate sig.count() job
-    # was measured at ~0.4 s of pure latency per call, round 8)
-    bands_df.count()
 
-    if max_bucket is not None:
-        # hot-bucket EXCLUSION list via aggregate + broadcast anti-join: the
-        # probe rows never shuffle (a window count would re-shuffle them all
-        # on the bucket key just to count); the hot list is tiny by definition
-        hot = (bands_df.groupBy("band_id", "band_hash").count()
-                       .where(F.col("count") > max_bucket)
-                       .select("band_id", "band_hash"))
-        bands_df = bands_df.join(F.broadcast(hot),
-                                 ["band_id", "band_hash"], "left_anti")
+def _sig_side(sig: DataFrame, side: str) -> DataFrame:
+    """``(id_<side>, sig_<side>)``: a signature table renamed for one side
+    of a candidate pair."""
+    return sig.select(F.col("_id").alias(f"id_{side}"),
+                      F.col("sig").alias(f"sig_{side}"))
 
-    # Self-join via explicit aliases + qualified columns.  NOTE: renaming
-    # columns of the SAME plan and joining (the naive self-join) hits
-    # Spark's ambiguous-attribute resolution — both `sig_a` and `sig_b`
-    # can silently bind to one side, corrupting the estimator
-    # NONDETERMINISTICALLY.  Qualified aliases below are the supported
-    # pattern; ids travel through the bucket join, signatures re-attach by
-    # id afterwards.
-    ba, bb = bands_df.alias("ba"), bands_df.alias("bb")
-    pairs = (ba.join(bb,
-                     (F.col("ba.band_id") == F.col("bb.band_id"))
-                     & (F.col("ba.band_hash") == F.col("bb.band_hash"))
-                     & (F.col("ba._id") < F.col("bb._id")))
-               .select(F.col("ba._id").alias("id_a"),
-                       F.col("bb._id").alias("id_b"))
-               .dropDuplicates(["id_a", "id_b"]))
-    sa = sig.select(F.col("_id").alias("id_a"), F.col("sig").alias("sig_a")).alias("sa")
-    sb = sig.select(F.col("_id").alias("id_b"), F.col("sig").alias("sig_b")).alias("sb")
-    pairs = pairs.join(sa, "id_a").join(sb, "id_b")
-    # A/B-measured (round 8): this zip_with/filter form beats a flat
-    # 32-term element_at comparison sum (1.9 s vs 2.5 s at 600k candidate
-    # pairs) — keep the higher-order form.
-    est = (F.size(F.filter(F.zip_with(F.col("sa.sig_a"), F.col("sb.sig_b"),
-                                      lambda x, y: x == y),
-                           lambda m: m)).cast("double") / F.lit(float(n_hashes)))
-    pairs = pairs.withColumn("est_jaccard", est)
-    out = (pairs.where(F.col("est_jaccard") >= jaccard_threshold)
-                .select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
-                .persist())
-    # Materialize the (small) pair result, then release the heavy
-    # intermediate caches — they otherwise leak executor storage memory
-    # across repeated calls in one session.  Callers owning long sessions
-    # may unpersist() the returned DataFrame when done with it.
-    out.count()
-    if sig_owned:
-        sig.unpersist()
-    bands_cached.unpersist()
-    return out
+
+def _est_jaccard(n_hashes: int) -> F.Column:
+    """Share of equal minhashes between ``sig_a`` and ``sig_b``.  A/B
+    measured (round 8): this zip_with/filter form beats a flat 32-term
+    element_at comparison sum (1.9 s vs 2.5 s at 600k candidate pairs)."""
+    return (F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
+                            lambda m: m)).cast("double")
+            / F.lit(float(n_hashes)))
 
 
 def _fnv1a64(data: bytes) -> int:
@@ -528,38 +511,24 @@ def simhash_pairs_from_sig(sig: DataFrame, max_hamming: int = 3,
     ``_id``, ``simhash``) — the pair-join stage of ``simhash_pairs``,
     callable over a persisted signature artifact so an external oracle can
     re-run the same join SQL-side."""
-    # unlike minhash_pairs_from_sig, sig is consumed EXACTLY once here (the
-    # self-joined table is ``blocks``, which carries simhash through), so an
-    # owned sig needs no cache of its own — blocks' materialization below is
-    # the pre-self-join fence (two redundant jobs removed, round 8)
-    blocks = pigeonhole_block_table(sig, max_hamming).persist()
-    blocks.count()  # materialize before the self-join (see minhash_lsh)
+    # sig is read once: the block table carries simhash through, so only
+    # the block table is held (two redundant jobs removed, round 8)
+    with _Fence() as fence:
+        pairs = _bucket_self_join(
+            fence, pigeonhole_block_table(sig, max_hamming),
+            ["block_id", "block_val"], ["simhash"], max_bucket)
+        return fence.hold(_within_hamming(pairs, max_hamming), out=True)
 
-    if max_bucket is not None:
-        # broadcast anti-join exclusion (see minhash_lsh): probe rows stay put
-        hot = (blocks.groupBy("block_id", "block_val").count()
-                     .where(F.col("count") > max_bucket)
-                     .select("block_id", "block_val"))
-        blocks_f = blocks.join(F.broadcast(hot),
-                               ["block_id", "block_val"], "left_anti")
-    else:
-        blocks_f = blocks
 
-    ba, bb = blocks_f.alias("ba"), blocks_f.alias("bb")
-    pairs = (ba.join(bb,
-                     (F.col("ba.block_id") == F.col("bb.block_id"))
-                     & (F.col("ba.block_val") == F.col("bb.block_val"))
-                     & (F.col("ba._id") < F.col("bb._id")))
-               .select(F.col("ba._id").alias("id_a"),
-                       F.col("bb._id").alias("id_b"),
-                       F.bit_count(F.col("ba.simhash")
-                                   .bitwiseXOR(F.col("bb.simhash"))).alias("hamming"))
-               .where(F.col("hamming") <= max_hamming)
-               .dropDuplicates(["id_a", "id_b"]))
-    out = pairs.persist()
-    out.count()   # materialize the (small) result, release intermediates
-    blocks.unpersist()
-    return out
+def _within_hamming(pairs: DataFrame, max_hamming: int) -> DataFrame:
+    """Candidates carrying ``simhash_a``/``simhash_b`` -> the verified
+    ``(id_a, id_b, hamming <= max_hamming)`` pairs, one row per pair."""
+    return (pairs.select("id_a", "id_b",
+                         F.bit_count(F.col("simhash_a")
+                                     .bitwiseXOR(F.col("simhash_b")))
+                          .alias("hamming"))
+                 .where(F.col("hamming") <= max_hamming)
+                 .dropDuplicates(["id_a", "id_b"]))
 
 
 def phash_pairs(images: DataFrame, id_col: str = "image_id",
@@ -588,26 +557,188 @@ def ngram_jaccard(docs: DataFrame, pairs: DataFrame,
     The returned DataFrame is materialized + persisted so the shingle-set
     intermediate can be unpersisted here (same cache hygiene as
     ``minhash_lsh``); callers may ``unpersist()`` the result when done."""
-    sh = docs.select(F.col(id_col).alias("_id"),
-                     F.array_distinct(shingles(text_col, k)).alias("sh")).persist()
-    j = (pairs
-         .join(sh.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-         .join(sh.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = j.select("id_a", "id_b",
-                   F.round(inter / union, 6).alias("jaccard")).persist()
-    out.count()
-    sh.unpersist()
-    return out
+    with _Fence() as fence:
+        sh = fence.hold(docs.select(
+            F.col(id_col).alias("_id"),
+            F.array_distinct(shingles(text_col, k)).alias("sh")), count=False)
+        j = (pairs
+             .join(sh.select(F.col("_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+             .join(sh.select(F.col("_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b"))
+        inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+        union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+        return fence.hold(j.select("id_a", "id_b",
+                                   F.round(inter / union, 6).alias("jaccard")),
+                          out=True)
 
 
 # ---------------------------------------------------------------------------
 # incremental dedup against a persisted signature store (round 6 — the
 # streaming-ingest analog of similarity.append_to_index: a training-data
 # pipeline appends documents daily and must reject near-dups of the
-# RESIDENT corpus without recomputing anything over it)
+# RESIDENT corpus without recomputing anything over it).  A store is
+# ``sigs`` (_id + signature), the family's derived bucket table and a
+# params sidecar; MinHash and pHash stores share every step below.
 # ---------------------------------------------------------------------------
+
+class _Family(NamedTuple):
+    """What a store's params sidecar says about its bucket table."""
+    derived: str                             # "bands" | "blocks"
+    keys: list                               # bucket key columns
+    carry: list                              # columns the probe carries
+    width: int                               # bucket rows per signature
+    table: Callable[[DataFrame], DataFrame]  # sigs -> bucket table
+
+
+def _family(params: dict) -> _Family:
+    if "n_hashes" in params:
+        n_hashes, bands = int(params["n_hashes"]), int(params["bands"])
+        return _Family("bands", ["band_id", "band_hash"], [], bands,
+                       lambda s: band_table(s, n_hashes, bands))
+    max_hamming = int(params["max_hamming"])
+    return _Family("blocks", ["block_id", "block_val"], ["simhash"],
+                   max_hamming + 1,
+                   lambda s: pigeonhole_block_table(s, max_hamming))
+
+
+def _params(spark, path: str) -> dict:
+    return spark.read.parquet(f"{path}/params").collect()[0].asDict()
+
+
+def _build_store(sig: DataFrame, path: str, params: dict) -> None:
+    """Write ``sigs``, the bucket table derived from the written sigs, and
+    the params sidecar."""
+    spark = sig.sparkSession
+    fam = _family(params)
+    sig.write.mode("overwrite").parquet(f"{path}/sigs")
+    fam.table(spark.read.parquet(f"{path}/sigs")) \
+        .write.mode("overwrite").parquet(f"{path}/{fam.derived}")
+    spark.createDataFrame(pd.DataFrame({k: [v] for k, v in params.items()})) \
+        .write.mode("overwrite").parquet(f"{path}/params")
+
+
+def _store_pairs(spark, path: str, params: dict, new_sig: DataFrame,
+                 max_bucket: int | None, broadcast_threshold: int,
+                 verify, intra_pairs):
+    """The probe both ``incremental_*_pairs`` share -> ``(pairs, new_sig)``,
+    both persisted for the caller to release.
+
+    The resident bucket table is only SCANNED: the batch's table
+    BROADCASTS against it, so no resident row shuffles.  A batch whose
+    table exceeds ``broadcast_threshold`` rows (a large BACKFILL, which
+    would OOM as a broadcast) joins sort-merge instead, hint-pinned so
+    size statistics cannot flip it back.  Resident hot buckets are a
+    property of the STORE and are excluded store-side with
+    ``countDistinct``: a crash-replayed append can leave DUPLICATE rows
+    (harmless for pairs, which dedupe), and a raw row count would let them
+    push a legitimate bucket over the cap — silently disabling near-dup
+    detection for it.
+
+    ``verify(cross, new_sig, sigs_dir, small)`` turns the raw probe rows
+    (``id_a`` resident, ``id_b`` batch, carried columns) into the
+    family's verified pairs; ``intra_pairs(new_sig)`` is its in-batch
+    pair stage."""
+    from .similarity import _live_dir
+    fam = _family(params)
+    # a compaction crashed mid-swap leaves the layout under __compact_old —
+    # READ it from there; renaming from this (read-only) path would race an
+    # in-flight compaction swap (review r7, third pass).  The next
+    # append/compaction performs the actual recovery.
+    dirs = [f"{path}/sigs", f"{path}/{fam.derived}"]
+    live = [_live_dir(d) for d in dirs]
+    # fail BEFORE any pair work or sink delivery: with the id widening
+    # relaxed in-session, a mistyped batch id would otherwise surface only
+    # at append time — after the out_sink already delivered the batch,
+    # leaving a permanent poison pill (review r7, third pass)
+    _check_store_id_type(spark, path, new_sig)
+    with _Fence() as fence:
+        new_sig = fence.hold(new_sig, count=False, out=True)
+        small = new_sig.count() * fam.width <= broadcast_threshold
+        stored = spark.read.parquet(live[1])
+        if max_bucket is not None:
+            hot = (stored.groupBy(*fam.keys)
+                         .agg(F.countDistinct("_id").alias("n"))
+                         .where(F.col("n") > max_bucket).select(*fam.keys))
+            stored = stored.join(F.broadcast(hot), fam.keys, "left_anti")
+        batch = fam.table(new_sig)
+        batch = F.broadcast(batch) if small else batch.hint("merge")
+        cross = (stored.alias("s")
+                       .join(batch.alias("b"), _same_bucket("s", "b", fam.keys))
+                       .select(*_pair_cols("s", "b", fam.carry))
+                       .where(F.col("id_a") != F.col("id_b")))
+        cross = verify(cross, new_sig, live[0], small)
+        intra = intra_pairs(new_sig)
+        fence.adopt(intra)
+        pairs = cross.unionByName(intra)
+        if live != dirs:
+            # crashed-swap view: checkpoint (not persist) so the pair table
+            # survives the writer recovery that the downstream append runs —
+            # a persisted plan re-evaluates against the renamed-away path
+            # if its partitions are evicted.  Eager: no count needed.
+            return pairs.localCheckpoint(eager=True), new_sig
+        return fence.hold(pairs, out=True), new_sig
+
+
+def _append_store(spark, path: str, new_sig: DataFrame,
+                  check_id_type: bool) -> int:
+    """Both ``append_to_*_store``: append a batch's sigs and bucket rows."""
+    from .similarity import _recover_swap
+    fam = _family(_params(spark, path))
+    # a compaction crashed mid-swap leaves sigs/derived under
+    # __compact_old; appending into a fresh root would orphan the store
+    _recover_swap(f"{path}/sigs")
+    _recover_swap(f"{path}/{fam.derived}")
+    if check_id_type:
+        _check_store_id_type(spark, path, new_sig)
+    # checkpoint: the (semi-join) input evaluates ONCE, not per action.
+    # Write order derived THEN sigs: a crash between the files leaves
+    # duplicate bucket rows a replay re-appends harmlessly, whereas
+    # sigs-without-buckets would trip the same-id replay guard while
+    # silently losing CONTENT rejection for those rows forever.  (At
+    # deployment both appends belong in one transactional Iceberg
+    # commit — SCALE.md checkpoint row.)
+    new_sig = new_sig.localCheckpoint(eager=True)
+    n = new_sig.count()
+    fam.table(new_sig).write.mode("append").parquet(f"{path}/{fam.derived}")
+    new_sig.write.mode("append").parquet(f"{path}/sigs")
+    return n
+
+
+def _admit(spark, path: str, new_rows: DataFrame, id_col: str,
+           pairs: DataFrame, new_sig: DataFrame, out_sink,
+           append) -> DataFrame:
+    """admit -> sink -> append -> release, shared by both incremental
+    dedups; ``pairs`` and ``new_sig`` are released here, also on failure.
+    Returns the accepted rows of ``new_rows``."""
+    from .similarity import _live_dir
+    with _Fence() as fence:
+        fence.adopt(pairs, new_sig)
+        new_ids = new_sig.select(F.col("_id").alias(id_col))
+        stored_ids = spark.read.parquet(_live_dir(f"{path}/sigs")) \
+            .select("_id")
+        # localCheckpoint (NOT persist): the append below writes into
+        # {path}/sigs, and Spark's InsertIntoHadoopFsRelation refreshes
+        # that path's file index — invalidating any CACHED plan that reads
+        # it (this plan does, via stored_ids).  A recompute after the
+        # append would see the just-accepted rows as resident and reject
+        # them.  Checkpointing truncates the plan to materialized blocks
+        # with no path dependency, so the returned DataFrame is stable.
+        accepted = _admit_batch(new_rows, pairs.select("id_a", "id_b"),
+                                new_ids, stored_ids,
+                                id_col).localCheckpoint(eager=True)
+        if out_sink is not None:
+            # deliver BEFORE the store append: a crash after the append but
+            # before delivery would make the replay reject these rows as
+            # already-resident — accepted docs silently lost from the
+            # output forever.  Sink-first + an idempotent per-batch sink
+            # narrows the failure window to a mid-append crash, whose
+            # residue is duplicate store rows, not lost documents.
+            out_sink(accepted)
+        append(spark, path,
+               new_sig.join(accepted.select(F.col(id_col).alias("_id")),
+                            "_id", "left_semi"),
+               check_id_type=False)  # checked pre-sink in the pairs step
+        return accepted
+
 
 def build_minhash_store(docs: DataFrame, path: str, text_col: str = "text",
                         id_col: str = "doc_id", k: int = 5,
@@ -618,18 +749,10 @@ def build_minhash_store(docs: DataFrame, path: str, text_col: str = "text",
     store only as (a) one SCAN of ``bands`` probed by a BROADCAST of the
     new batch's bands (the resident rows never shuffle), and (b) a
     semi-joined read of ``sigs`` bounded by the candidate count."""
-    import pandas as pd
     # store boundary: enforce the canonical integral-or-string id class
     _widened_id_type(docs.schema[id_col].dataType.simpleString(), id_col)
-    sig = minhash_signatures_np(docs, text_col, id_col, k, n_hashes)
-    sig.write.mode("overwrite").parquet(f"{path}/sigs")
-    spark = docs.sparkSession
-    stored_sig = spark.read.parquet(f"{path}/sigs")
-    band_table(stored_sig, n_hashes, bands) \
-        .write.mode("overwrite").parquet(f"{path}/bands")
-    spark.createDataFrame(pd.DataFrame({
-        "k": [k], "n_hashes": [n_hashes], "bands": [bands],
-    })).write.mode("overwrite").parquet(f"{path}/params")
+    _build_store(minhash_signatures_np(docs, text_col, id_col, k, n_hashes),
+                 path, {"k": k, "n_hashes": n_hashes, "bands": bands})
 
 
 def incremental_minhash_pairs(spark, path: str, new_docs: DataFrame,
@@ -656,88 +779,33 @@ def incremental_minhash_pairs(spark, path: str, new_docs: DataFrame,
     table exceeds this row count fall back to a sort-merge join on the
     band key (hint-pinned so size stats can't flip it back), shuffling
     both sides but never materializing the batch in every executor."""
-    from .similarity import _live_dir
-    # a compaction crashed mid-swap leaves the layout under
-    # __compact_old — READ it from there; renaming from this (read-only)
-    # path would race an in-flight compaction swap (review r7, third
-    # pass).  The next append/compaction performs the actual recovery.
-    spath, bpath = _live_dir(f"{path}/sigs"), _live_dir(f"{path}/bands")
-    p = spark.read.parquet(f"{path}/params").collect()[0]
-    k, n_hashes, bands = int(p["k"]), int(p["n_hashes"]), int(p["bands"])
+    p = _params(spark, path)
+    n_hashes, bands = int(p["n_hashes"]), int(p["bands"])
 
-    new_sig = minhash_signatures_np(new_docs, text_col, id_col, k,
-                                    n_hashes).persist()
-    # fail BEFORE any pair work or sink delivery: with the id widening
-    # relaxed in-session, a mistyped batch id would otherwise surface
-    # only at append time — after incremental_dedup's out_sink already
-    # delivered the batch, leaving a permanent poison pill (review r7,
-    # third pass)
-    _check_store_id_type(spark, path, new_sig)
-    n_new = new_sig.count()
-    small_batch = n_new * bands <= broadcast_threshold
-    new_bands = band_table(new_sig, n_hashes, bands)
+    def verify(cross, new_sig, sigs_dir, small):
+        sb = _sig_side(new_sig, "b")
+        # signature re-attachment scales with the batch too
+        sb = F.broadcast(sb) if small else sb.hint("merge")
+        return (cross.dropDuplicates(["id_a", "id_b"])
+                     .join(_sig_side(spark.read.parquet(sigs_dir), "a"),
+                           "id_a")
+                     .join(sb, "id_b")
+                     .withColumn("est_jaccard",
+                                 F.round(_est_jaccard(n_hashes), 6))
+                     .where(F.col("est_jaccard") >= jaccard_threshold)
+                     .select("id_a", "id_b", "est_jaccard")
+                     # crash-replay-duplicated sig rows in the store
+                     # re-expand the deduped candidates here — dedupe
+                     # AFTER attachment too (bounded: candidate-sized)
+                     .dropDuplicates(["id_a", "id_b"]))
 
-    stored_bands = spark.read.parquet(bpath)
-    if max_bucket is not None:
-        # resident hot buckets are a property of the STORE — exclude them
-        # store-side (broadcast list), same guard as minhash_lsh.
-        # countDistinct, not count: a crash-replayed append can leave
-        # DUPLICATE band rows (harmless for pairs, which dedupe), and a
-        # raw row count would let them push a legitimate bucket over the
-        # cap — silently disabling near-dup detection for it
-        hot = (stored_bands.groupBy("band_id", "band_hash")
-                           .agg(F.countDistinct("_id").alias("n"))
-                           .where(F.col("n") > max_bucket)
-                           .select("band_id", "band_hash"))
-        stored_bands = stored_bands.join(F.broadcast(hot),
-                                         ["band_id", "band_hash"],
-                                         "left_anti")
-
-    nb_side = (F.broadcast(new_bands) if small_batch
-               else new_bands.hint("merge"))
-    cross = (stored_bands.alias("sb")
-             .join(nb_side.alias("nb"),
-                   (F.col("sb.band_id") == F.col("nb.band_id"))
-                   & (F.col("sb.band_hash") == F.col("nb.band_hash")))
-             .select(F.col("sb._id").alias("id_a"),
-                     F.col("nb._id").alias("id_b"))
-             .where(F.col("id_a") != F.col("id_b"))
-             .dropDuplicates(["id_a", "id_b"]))
-    stored_sig = spark.read.parquet(spath)
-    sa = stored_sig.select(F.col("_id").alias("id_a"),
-                           F.col("sig").alias("sig_a"))
-    sb = new_sig.select(F.col("_id").alias("id_b"),
-                        F.col("sig").alias("sig_b"))
-    if not small_batch:  # signature re-attachment scales with the batch too
-        sb = sb.hint("merge")
-    est = (F.size(F.filter(F.zip_with("sig_a", "sig_b",
-                                      lambda x, y: x == y),
-                           lambda m: m)).cast("double")
-           / F.lit(float(n_hashes)))
-    sb_side = F.broadcast(sb) if small_batch else sb
-    cross_pairs = (cross.join(sa, "id_a").join(sb_side, "id_b")
-                        .withColumn("est_jaccard", F.round(est, 6))
-                        .where(F.col("est_jaccard") >= jaccard_threshold)
-                        .select("id_a", "id_b", "est_jaccard")
-                        # crash-replay-duplicated sig rows in the store
-                        # re-expand the deduped candidates here — dedupe
-                        # AFTER attachment too (bounded: candidate-sized)
-                        .dropDuplicates(["id_a", "id_b"]))
-
-    intra = minhash_pairs_from_sig(new_sig, n_hashes, bands,
-                                   jaccard_threshold, max_bucket)
-    pairs = cross_pairs.unionByName(intra)
-    if spath != f"{path}/sigs" or bpath != f"{path}/bands":
-        # crashed-swap view: checkpoint (not persist) so the pair table
-        # survives the writer recovery that the downstream append runs —
-        # a persisted plan re-evaluates against the renamed-away path if
-        # its partitions are evicted.  Eager: no count needed.
-        pairs = pairs.localCheckpoint(eager=True)
-    else:
-        pairs = pairs.persist()
-        pairs.count()
-    intra.unpersist()
-    return pairs, new_sig
+    return _store_pairs(
+        spark, path, p,
+        minhash_signatures_np(new_docs, text_col, id_col, int(p["k"]),
+                              n_hashes),
+        max_bucket, broadcast_threshold, verify,
+        lambda sig: minhash_pairs_from_sig(sig, n_hashes, bands,
+                                           jaccard_threshold, max_bucket))
 
 
 def append_to_minhash_store(spark, path: str, new_sig: DataFrame,
@@ -747,27 +815,7 @@ def append_to_minhash_store(spark, path: str, new_sig: DataFrame,
     store).  Returns the number of rows appended.  ``check_id_type=False``
     skips the resident-schema probe when the caller (the incremental
     paths) already ran it pre-sink — direct callers keep the chokepoint."""
-    from .similarity import _recover_swap
-    # a compaction crashed mid-swap leaves sigs/bands under __compact_old;
-    # appending into a fresh root would orphan the resident store
-    _recover_swap(f"{path}/sigs")
-    _recover_swap(f"{path}/bands")
-    if check_id_type:
-        _check_store_id_type(spark, path, new_sig)
-    p = spark.read.parquet(f"{path}/params").collect()[0]
-    # checkpoint: the (semi-join) input evaluates ONCE, not per action.
-    # Write order bands THEN sigs: a crash between the files leaves
-    # duplicate-band rows a replay re-appends harmlessly, whereas
-    # sigs-without-bands would trip the same-id replay guard while
-    # silently losing CONTENT rejection for those docs forever.  (At
-    # deployment both appends belong in one transactional Iceberg
-    # commit — SCALE.md checkpoint row.)
-    new_sig = new_sig.localCheckpoint(eager=True)
-    n = new_sig.count()
-    band_table(new_sig, int(p["n_hashes"]), int(p["bands"])) \
-        .write.mode("append").parquet(f"{path}/bands")
-    new_sig.write.mode("append").parquet(f"{path}/sigs")
-    return n
+    return _append_store(spark, path, new_sig, check_id_type)
 
 
 def _admit_batch(new_docs: DataFrame, pairs: DataFrame,
@@ -834,35 +882,17 @@ def incremental_dedup(spark, path: str, new_docs: DataFrame,
     pairs, new_sig = incremental_minhash_pairs(
         spark, path, new_docs, text_col, id_col, jaccard_threshold,
         max_bucket, broadcast_threshold)
-    new_ids = new_sig.select(F.col("_id").alias(id_col))
-    from .similarity import _live_dir
-    stored_ids = spark.read.parquet(_live_dir(f"{path}/sigs")) \
-        .select("_id")
-    # localCheckpoint (NOT persist): the append below writes into
-    # {path}/sigs, and Spark's InsertIntoHadoopFsRelation refreshes that
-    # path's file index — invalidating any CACHED plan that reads it
-    # (this plan does, via stored_ids).  A recompute after the append
-    # would see the just-accepted rows as resident and reject them.
-    # Checkpointing truncates the plan to materialized blocks with no
-    # path dependency, so the returned DataFrame is stable.
-    accepted = _admit_batch(new_docs, pairs, new_ids, stored_ids,
-                            id_col).localCheckpoint(eager=True)
-    if out_sink is not None:
-        # deliver BEFORE the store append: a crash after the append but
-        # before delivery would make the replay reject these rows as
-        # already-resident — accepted docs silently lost from the
-        # output forever.  Sink-first + an idempotent per-batch sink
-        # narrows the failure window to a mid-append crash, whose
-        # residue is duplicate store rows, not lost documents.
-        out_sink(accepted)
-    append_to_minhash_store(
-        spark, path,
-        new_sig.join(accepted.select(F.col(id_col).alias("_id")),
-                     "_id", "left_semi"),
-        check_id_type=False)   # already checked pre-sink in the pairs step
-    new_sig.unpersist()
-    pairs.unpersist()
-    return accepted
+    return _admit(spark, path, new_docs, id_col, pairs, new_sig, out_sink,
+                  append_to_minhash_store)
+
+
+def _phash_sig(images: DataFrame, id_col: str, phash_col: str) -> DataFrame:
+    """``(_id, simhash)`` store signature table, ``_id`` at the
+    store-stable widened type."""
+    t = _widened_id_type(images.schema[id_col].dataType.simpleString(),
+                         id_col)
+    return images.select(F.col(id_col).cast(t).alias("_id"),
+                         F.col(phash_col).cast("long").alias("simhash"))
 
 
 def build_phash_store(images: DataFrame, path: str,
@@ -873,17 +903,8 @@ def build_phash_store(images: DataFrame, path: str,
     pigeonhole ``blocks`` table and a params sidecar.  Incremental
     batches then touch the resident corpus only as a block scan probed
     by a broadcast (no resident shuffle)."""
-    import pandas as pd
-    sig = images.select(_widened_id_col(images, id_col),
-                        F.col(phash_col).cast("long").alias("simhash"))
-    sig.write.mode("overwrite").parquet(f"{path}/sigs")
-    spark = images.sparkSession
-    stored = spark.read.parquet(f"{path}/sigs")
-    pigeonhole_block_table(stored, max_hamming) \
-        .write.mode("overwrite").parquet(f"{path}/blocks")
-    spark.createDataFrame(pd.DataFrame({
-        "max_hamming": [max_hamming],
-    })).write.mode("overwrite").parquet(f"{path}/params")
+    _build_store(_phash_sig(images, id_col, phash_col), path,
+                 {"max_hamming": max_hamming})
 
 
 def incremental_phash_pairs(spark, path: str, new_images: DataFrame,
@@ -897,77 +918,20 @@ def incremental_phash_pairs(spark, path: str, new_images: DataFrame,
     rows scanned, hamming verified JVM-side; ``broadcast_threshold``
     guards the backfill case with the same sort-merge fallback).
     Returns ``(pairs, new_sig)``."""
-    from .similarity import _live_dir
-    # read-only crashed-swap view — see incremental_minhash_pairs
-    bpath = _live_dir(f"{path}/blocks")
-    p = spark.read.parquet(f"{path}/params").collect()[0]
+    p = _params(spark, path)
     max_hamming = int(p["max_hamming"])
-
-    new_sig = new_images.select(
-        _widened_id_col(new_images, id_col),
-        F.col(phash_col).cast("long").alias("simhash")).persist()
-    # type-match vs the resident store BEFORE pair work / sink delivery
-    # (review r7, third pass — same rationale as the minhash path)
-    _check_store_id_type(spark, path, new_sig)
-    n_new = new_sig.count()
-    small_batch = n_new * (max_hamming + 1) <= broadcast_threshold
-    new_blocks = pigeonhole_block_table(new_sig, max_hamming)
-
-    stored_blocks = spark.read.parquet(bpath)
-    if max_bucket is not None:
-        # countDistinct — see incremental_minhash_pairs (replay-duplicated
-        # rows must not inflate a bucket over the cap)
-        hot = (stored_blocks.groupBy("block_id", "block_val")
-                            .agg(F.countDistinct("_id").alias("n"))
-                            .where(F.col("n") > max_bucket)
-                            .select("block_id", "block_val"))
-        stored_blocks = stored_blocks.join(F.broadcast(hot),
-                                           ["block_id", "block_val"],
-                                           "left_anti")
-
-    nb_side = (F.broadcast(new_blocks) if small_batch
-               else new_blocks.hint("merge"))
-    cross = (stored_blocks.alias("sb")
-             .join(nb_side.alias("nb"),
-                   (F.col("sb.block_id") == F.col("nb.block_id"))
-                   & (F.col("sb.block_val") == F.col("nb.block_val")))
-             .select(F.col("sb._id").alias("id_a"),
-                     F.col("nb._id").alias("id_b"),
-                     F.bit_count(F.col("sb.simhash")
-                                 .bitwiseXOR(F.col("nb.simhash")))
-                      .alias("hamming"))
-             .where((F.col("hamming") <= max_hamming)
-                    & (F.col("id_a") != F.col("id_b")))
-             .dropDuplicates(["id_a", "id_b"]))
-
-    intra = simhash_pairs_from_sig(new_sig, max_hamming, max_bucket)
-    pairs = cross.unionByName(intra)
-    if bpath != f"{path}/blocks":
-        # crashed-swap view — see incremental_minhash_pairs
-        pairs = pairs.localCheckpoint(eager=True)
-    else:
-        pairs = pairs.persist()
-        pairs.count()
-    intra.unpersist()
-    return pairs, new_sig
+    return _store_pairs(
+        spark, path, p, _phash_sig(new_images, id_col, phash_col),
+        max_bucket, broadcast_threshold,
+        lambda cross, *_: _within_hamming(cross, max_hamming),
+        lambda sig: simhash_pairs_from_sig(sig, max_hamming, max_bucket))
 
 
 def append_to_phash_store(spark, path: str, new_sig: DataFrame,
                           check_id_type: bool = True) -> int:
     """Image twin of :func:`append_to_minhash_store`: checkpoint once,
     write blocks THEN sigs (same crash-ordering rationale)."""
-    from .similarity import _recover_swap
-    _recover_swap(f"{path}/sigs")
-    _recover_swap(f"{path}/blocks")
-    if check_id_type:
-        _check_store_id_type(spark, path, new_sig)
-    p = spark.read.parquet(f"{path}/params").collect()[0]
-    new_sig = new_sig.localCheckpoint(eager=True)
-    n = new_sig.count()
-    pigeonhole_block_table(new_sig, int(p["max_hamming"])) \
-        .write.mode("append").parquet(f"{path}/blocks")
-    new_sig.write.mode("append").parquet(f"{path}/sigs")
-    return n
+    return _append_store(spark, path, new_sig, check_id_type)
 
 
 def incremental_phash_dedup(spark, path: str, new_images: DataFrame,
@@ -985,26 +949,8 @@ def incremental_phash_dedup(spark, path: str, new_images: DataFrame,
     pairs, new_sig = incremental_phash_pairs(
         spark, path, new_images, id_col, phash_col, max_bucket,
         broadcast_threshold)
-    new_ids = new_sig.select(F.col("_id").alias(id_col))
-    from .similarity import _live_dir
-    stored_ids = spark.read.parquet(_live_dir(f"{path}/sigs")) \
-        .select("_id")
-    # localCheckpoint, not persist — see incremental_dedup (the sig
-    # append refreshes the path's file index and would invalidate a
-    # cached plan reading it, flipping the returned rows to rejected)
-    accepted = _admit_batch(new_images, pairs.select("id_a", "id_b"),
-                            new_ids, stored_ids,
-                            id_col).localCheckpoint(eager=True)
-    if out_sink is not None:
-        out_sink(accepted)   # sink-first — see incremental_dedup
-    append_to_phash_store(
-        spark, path,
-        new_sig.join(accepted.select(F.col(id_col).alias("_id")),
-                     "_id", "left_semi"),
-        check_id_type=False)   # already checked pre-sink in the pairs step
-    new_sig.unpersist()
-    pairs.unpersist()
-    return accepted
+    return _admit(spark, path, new_images, id_col, pairs, new_sig,
+                  out_sink, append_to_phash_store)
 
 
 def compact_store(spark, path: str, n_files: int = 8) -> dict:
@@ -1031,10 +977,8 @@ def compact_store(spark, path: str, n_files: int = 8) -> dict:
     SCALE.md checkpoint row."""
     from .similarity import _count_data_files, _recover_swap, _swap_dir
 
-    p = spark.read.parquet(f"{path}/params").collect()[0]
-    is_minhash = "n_hashes" in p.__fields__
-    dname = "bands" if is_minhash else "blocks"
-    spath, dpath = f"{path}/sigs", f"{path}/{dname}"
+    fam = _family(_params(spark, path))
+    spath, dpath = f"{path}/sigs", f"{path}/{fam.derived}"
     _recover_swap(spath)
     _recover_swap(dpath)
     files_before = _count_data_files(spath) + _count_data_files(dpath)
@@ -1045,15 +989,12 @@ def compact_store(spark, path: str, n_files: int = 8) -> dict:
 
     stmp, dtmp = spath + "__compact_tmp", dpath + "__compact_tmp"
     ded.write.mode("overwrite").parquet(stmp)
-    ded2 = spark.read.parquet(stmp)
-    derived = (band_table(ded2, int(p["n_hashes"]), int(p["bands"]))
-               if is_minhash
-               else pigeonhole_block_table(ded2, int(p["max_hamming"])))
-    derived.coalesce(max(1, n_files)).write.mode("overwrite").parquet(dtmp)
+    fam.table(spark.read.parquet(stmp)).coalesce(max(1, n_files)) \
+        .write.mode("overwrite").parquet(dtmp)
 
     for live, tmp in ((dpath, dtmp), (spath, stmp)):  # derived THEN sigs
         _swap_dir(live, tmp)
-    return {"store": "minhash" if is_minhash else "phash",
+    return {"store": "minhash" if fam.derived == "bands" else "phash",
             "files_before": files_before,
             "files_after": _count_data_files(spath) + _count_data_files(dpath),
             "rows_before": rows_before, "rows_after": rows_after,

@@ -594,7 +594,10 @@ def compact_index(spark, path: str, id_col: str = "vec_id") -> dict:
     # post-compaction.  Conflict check = one aggregation over a content
     # hash of every non-batch column; maintenance-path cost only.
     content = [c for c in cur.columns if c != "batch_id"]
-    bad = (cur.select(id_col, F.xxhash64(*content).alias("_h"))
+    # hash the JSON form: xxhash64 skips NULL arguments, so rows differing
+    # only in WHICH column is NULL would hash alike (ADVICE r8 #3)
+    bad = (cur.select(id_col,
+                      F.xxhash64(F.to_json(F.struct(*content))).alias("_h"))
               .groupBy(id_col)
               .agg(F.countDistinct("_h").alias("_n"))
               .where(F.col("_n") > 1)
@@ -673,28 +676,16 @@ def knn_pairs_exact(emb: DataFrame, dim: int, n_planes: int = 8,
     The returned DataFrame is eagerly materialized and persisted (so the
     intermediate bucketed table can be unpersisted here rather than leak);
     callers owning long sessions may ``unpersist()`` the result when done."""
+    from .dedup import _bucket_self_join, _Fence
     if center is None:
         center = data_mean(emb, dim, vec_col)
-    # persist: same self-join ambiguity hazard as dedup.minhash_lsh —
-    # the bucketed table must be materialized before joining it to itself
-    cached = with_lsh_bucket(emb, dim, n_planes, seed, vec_col,
-                             center=center).persist()
-    cached.count()  # materialize before the self-join (see dedup.minhash_lsh)
-    b = cached
-    if max_bucket is not None:
-        # broadcast anti-join exclusion: avoids re-shuffling the EMBEDDING
-        # rows on the bucket key just to count them (see dedup.minhash_lsh)
-        hot = (b.groupBy("bucket").count()
-                .where(F.col("count") > max_bucket).select("bucket"))
-        b = b.join(F.broadcast(hot), "bucket", "left_anti")
-    a = b.select(F.col(id_col).alias("id_a"),
-                 F.col(vec_col).cast("array<double>").alias("va"), "bucket")
-    c = b.select(F.col(id_col).alias("id_b"),
-                 F.col(vec_col).cast("array<double>").alias("vb"), "bucket")
-    pairs = (a.join(c, "bucket").where(F.col("id_a") < F.col("id_b"))
-              .withColumn("cosine", F.round(cosine_sim(F.col("va"), F.col("vb")), 8))
-              .where(F.col("cosine") >= threshold))
-    out = pairs.select("id_a", "id_b", "cosine").persist()
-    out.count()   # materialize the result, then drop the intermediate cache
-    cached.unpersist()
-    return out
+    table = with_lsh_bucket(emb, dim, n_planes, seed, vec_col,
+                            center=center).select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).cast("array<double>").alias("v"), "bucket")
+    with _Fence() as fence:
+        # one bucket per row, so no pair repeats: no dropDuplicates
+        pairs = _bucket_self_join(fence, table, ["bucket"], ["v"], max_bucket)
+        cos = F.round(cosine_sim(F.col("v_a"), F.col("v_b")), 8)
+        return fence.hold(pairs.select("id_a", "id_b", cos.alias("cosine"))
+                               .where(F.col("cosine") >= threshold), out=True)

@@ -21,6 +21,7 @@ results are identical.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 
 def kernel_parallelism(df: DataFrame) -> int:
@@ -63,19 +64,7 @@ def grouped_stream(df: DataFrame, group_cols: list, fn, schema: str,
 
     # declared field order (schema DDL) — output DataFrames are reindexed
     # to it so Arrow conversion never depends on dict insertion order
-    names, depth, cur = [], 0, []
-    for ch in schema:
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth -= 1
-        if ch == "," and depth == 0:
-            names.append("".join(cur).strip().split()[0])
-            cur = []
-        else:
-            cur.append(ch)
-    if "".join(cur).strip():
-        names.append("".join(cur).strip().split()[0])
+    names = StructType.fromDDL(schema).fieldNames()
 
     rep = keyed_repartition(df, *group_cols).sortWithinPartitions(*group_cols)
 

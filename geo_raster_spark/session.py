@@ -8,11 +8,13 @@ enabled for the pandas-UDF kernels, UTC session timezone for oracle parity.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 _WARM_FLAG = "_gsr_session_warmed"
+_log = logging.getLogger(__name__)
 
 
 def get_spark(app_name: str = "geo-raster-spark", cores: int | None = None,
@@ -46,8 +48,9 @@ def get_spark(app_name: str = "geo-raster-spark", cores: int | None = None,
             _warm_session(spark, cores)
         except Exception as exc:  # best-effort: a warm-up failure (e.g. a
             # locked-down temp dir in a foreign harness) must never take
-            # down session creation — queries still run, just cold.
-            print(f"geo_raster_spark: session warm-up skipped: {exc!r}")
+            # down session creation — queries still run, just cold.  Not
+            # stdout: that carries the bench and CLI JSON.
+            _log.warning("session warm-up skipped: %r", exc, exc_info=True)
         setattr(sc, _WARM_FLAG, True)
     return spark
 

@@ -738,3 +738,81 @@ def test_store_swap_recovery_and_id_widening(spark, sf_dir, tmp_path):
                       "simhash": np.array([3, 9], dtype=np.int64)}))
     dedup.append_to_phash_store(spark, ppath, psig)
     assert spark.read.parquet(f"{ppath}/blocks").count() > pn0
+
+
+def _caches(spark):
+    """(ids of the persisted RDDs, number of cached plans)."""
+    return (set(spark.sparkContext._jsc.getPersistentRDDs().keySet()),
+            spark._jsparkSession.sharedState().cacheManager()
+                 .numCachedEntries())
+
+
+def _leaked(spark, before, local_checkpoints=False):
+    """Persisted RDDs and cached plans taken since ``before`` and still
+    held.  ``local_checkpoints=True`` leaves out locally checkpointed
+    RDDs: they hold the data of a checkpointed result, and only the JVM's
+    context cleaner releases them, once nothing references them."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    new = sorted(i for i in _caches(spark)[0] - before[0]
+                 if not (local_checkpoints
+                         and rdds.get(i).rdd().isLocallyCheckpointed()))
+    return new, _caches(spark)[1] - before[1]
+
+
+def test_pair_stages_release_caches_on_failure(spark, sf_dir, tmp_path):
+    """Every public dedup/ANN pair operator releases the caches it took
+    when its pair stage raises — and, once the caller unpersists the
+    result, after success too.  The failure is a ``raise_error`` column in
+    the input.  In ``cross_modal_pairs`` only the image side fails, so the
+    text side's persisted pairs (its sibling thread's) must be released."""
+    from geo_raster_spark import synth
+    from geo_raster_spark.operators import similarity
+
+    def boom(df, key, col):
+        first = df.agg(F.min(key)).collect()[0][0]
+        return df.withColumn(col, F.when(F.col(key) == first,
+                                         F.raise_error(F.lit("planted")))
+                                   .otherwise(F.col(col)))
+
+    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+                 .select("doc_id", "text").limit(60))
+    imgs = synth.images_df(spark, 40, 4, with_bytes=False) \
+        .select("image_id", "phash", F.col("image_id").alias("caption"))
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
+        .select("vec_id", "embedding").limit(60)
+    mh_path, ph_path = str(tmp_path / "mh"), str(tmp_path / "ph")
+    dedup.build_minhash_store(docs, mh_path)
+    dedup.build_phash_store(imgs, ph_path)
+    bad_docs, bad_imgs = boom(docs, "doc_id", "text"), boom(imgs, "image_id",
+                                                            "phash")
+    new_id = F.col("doc_id") + 50_000_000
+    new_img = F.concat(F.lit("new_"), "image_id")
+    ops = [  # (name, operator, failing input, succeeding input)
+        ("minhash_lsh", dedup.minhash_lsh, bad_docs, docs),
+        ("phash_pairs", dedup.phash_pairs, bad_imgs, imgs),
+        ("knn_pairs_exact",
+         lambda e: similarity.knn_pairs_exact(e, dim=64,
+                                              center=np.zeros(64)),
+         boom(emb, "vec_id", "embedding"), emb),
+        ("cross_modal_pairs", lambda i: cc.cross_modal_pairs(docs, i),
+         bad_imgs, imgs),
+        ("incremental_dedup",
+         lambda d: dedup.incremental_dedup(
+             spark, mh_path, d.withColumn("doc_id", new_id)),
+         bad_docs, docs),
+        ("incremental_phash_dedup",
+         lambda i: dedup.incremental_phash_dedup(
+             spark, ph_path, i.withColumn("image_id", new_img)),
+         bad_imgs, imgs),
+    ]
+    for name, op, bad, good in ops:
+        before = _caches(spark)
+        with pytest.raises(Exception, match="planted"):
+            op(bad)
+        assert _leaked(spark, before) == ([], 0), name
+
+        before = _caches(spark)
+        op(good).unpersist()
+        # the incremental paths return (and build on) local checkpoints
+        assert _leaked(spark, before, local_checkpoints=True) == ([], 0), \
+            name

@@ -104,6 +104,48 @@ def test_grouped_stream_keeps_null_group_keys(spark):
     assert int(got.loc[got["k"].isna(), "n"].iloc[0]) == 1000
 
 
+def test_grouped_stream_decimal_output_column(spark):
+    """ADVICE r8 #1: the comma inside ``decimal(10,2)`` must not split the
+    output schema's field list (a hand-rolled DDL splitter did)."""
+    from decimal import Decimal
+
+    from geo_raster_spark.partitioning import grouped_stream
+
+    schema = "k int, d decimal(10,2), n long"
+
+    def fn(key, pdf):
+        return pd.DataFrame([{"k": int(key[0]), "d": Decimal(len(pdf)) / 4,
+                              "n": len(pdf)}])
+
+    df = spark.range(0, 100).withColumn("k", (F.col("id") % 3).cast("int"))
+    got = grouped_stream(df, ["k"], fn, schema).toPandas() \
+        .sort_values("k").reset_index(drop=True)
+    ref = (df.repartition("k").groupBy("k")
+             .applyInPandas(fn, schema=schema).toPandas()
+             .sort_values("k").reset_index(drop=True))
+    pd.testing.assert_frame_equal(got, ref)
+
+
+def test_warmup_failure_logs_instead_of_printing(spark, monkeypatch, capsys,
+                                                 caplog):
+    """ADVICE r8 #5: stdout carries the bench and CLI JSON, so a failed
+    session warm-up is reported through ``logging``."""
+    import logging
+
+    from geo_raster_spark import session
+
+    def fail(*_args):
+        raise RuntimeError("no temp dir")
+
+    monkeypatch.setattr(session, "_warm_session", fail)
+    monkeypatch.delenv("GSR_NO_WARMUP", raising=False)
+    monkeypatch.delattr(spark.sparkContext, session._WARM_FLAG)
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session.get_spark(app_name="geo-raster-spark-tests")
+    assert capsys.readouterr().out == ""
+    assert "no temp dir" in caplog.text
+
+
 def test_explicit_grid_registration_beats_env(tmp_path, monkeypatch):
     """ADVICE r7: a grid registered via register_grid_shift BEFORE any
     transform must not be silently replaced by the GSR_NTV2_GRIDS env
@@ -152,6 +194,29 @@ def test_compact_index_rejects_reembedded_id(spark, sf_dir, tmp_path):
                       .cast("array<float>"))
     similarity.append_to_index(spark, path, mutated, kind="ivf",
                                batch_id="day-002-reembedded")
+    with pytest.raises(ValueError, match="DIFFERING row content"):
+        similarity.compact_index(spark, path, id_col="vec_id")
+
+
+def test_compact_index_conflict_hash_sees_null_placement(spark, sf_dir,
+                                                         tmp_path):
+    """ADVICE r8 #3: ``xxhash64`` skips NULL arguments, so two copies of
+    an id whose rows differ only in WHICH column is NULL hashed alike and
+    compacted to an arbitrary survivor.  They must raise like any other
+    content conflict."""
+    from geo_raster_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
+        .select("vec_id", "embedding").orderBy("vec_id")
+    five, null = F.lit(5).cast("long"), F.lit(None).cast("long")
+    path = str(tmp_path / "ivf_nulls")
+    similarity.build_ivf_index(
+        emb.limit(40).select("*", five.alias("a"), null.alias("b")), 64,
+        path, n_centroids=4)
+    similarity.append_to_index(
+        spark, path, emb.limit(1).select("*", null.alias("a"),
+                                         five.alias("b")),
+        kind="ivf", batch_id="day-001")
     with pytest.raises(ValueError, match="DIFFERING row content"):
         similarity.compact_index(spark, path, id_col="vec_id")
 

@@ -353,17 +353,15 @@ def test_lsh_index_persisted_pruned_and_equal(spark, sf_dir, tmp_path):
 
 
 def test_minhash_cross_build_deterministic(spark, sf_dir):
-    """Regression: rebuilt plans must give identical signatures.
-
-    Guards the HOF lambda-arity footgun (a 2-arg `lambda s, i=i` binds the
-    array INDEX to i, poisoning salts with per-build variable names)."""
+    """Regression: rebuilt plans must give identical signatures — the
+    kernel may depend on nothing per build or per worker (e.g. Python's
+    salted ``hash()``)."""
     from geo_raster_spark.operators import dedup
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
     runs = []
     for _ in range(3):
-        p = (d.select("doc_id", dedup.minhash_signature(
-                dedup.shingles("text", 5), 16).alias("sig"))
-             .toPandas().sort_values("doc_id"))
+        p = (dedup.minhash_signatures_np(d, n_hashes=16)
+             .toPandas().sort_values("_id"))
         runs.append([tuple(np.asarray(s).tolist()) for s in p["sig"]])
     assert runs[0] == runs[1] == runs[2]
 
