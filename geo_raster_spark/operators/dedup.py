@@ -3,30 +3,33 @@
 Four tiers, all shuffle-conscious:
 
 - ``exact_dedup``       content-hash groupBy (one shuffle on a 16-byte key)
-- ``minhash_lsh``       shingle -> minhash -> band -> bucket-join; candidate
+- ``minhash_lsh``       shingle -> minhash -> band -> bucket pairs; candidate
                         pairs only form inside LSH buckets, never all-pairs.
                         Signatures come from one NumPy ``mapInPandas``
                         kernel (``minhash_signatures_np``); banding, the
-                        bucket join and the Jaccard estimate run in the JVM.
+                        bucket pairing and the Jaccard estimate run in the
+                        JVM.
 - ``simhash``           64-bit sign-of-weighted-votes fingerprint (Arrow
                         batch UDF), near-dups = Hamming distance <= t via
-                        bucket join on pigeonhole blocks.
+                        bucket pairs on pigeonhole blocks.
 - ``ngram_jaccard``     exact Jaccard verification on candidate pairs.
 
-Every bucket-join family (MinHash bands, SimHash/pHash blocks and the
-sign-LSH buckets of ``similarity.knn_pairs_exact``) pairs rows through one
-self-join, ``_bucket_self_join``, and takes and releases its caches through
-one ``_Fence``; a family adds only its own verification.  The persisted
-MinHash and pHash signature stores share one build / probe / admit /
-append path; their params sidecar tells the families apart.
+Every bucket family (MinHash bands, SimHash/pHash blocks and the sign-LSH
+buckets of ``similarity.knn_pairs_exact``) pairs rows through
+``_bucket_pairs``: one exchange on the bucket key, inside which each bucket
+pairs its own rows — singleton and over-full buckets never pair.  Caches
+are taken and released through one ``_Fence``; a family adds only its own
+verification.  The persisted MinHash and pHash signature stores share one
+build / probe / admit / append path; their params sidecar tells the
+families apart.
 
-At 100 TB the only shuffles are groupBys on (band_id, band_hash) — bounded,
-well-distributed keys; pair verification joins stay within buckets.
+At 100 TB the pair stage's only bucket shuffle is that groupBy on
+(band_id, band_hash) — bounded, well-distributed keys; pairs form within
+buckets.
 """
 
 from __future__ import annotations
 
-from functools import reduce
 from typing import Callable, NamedTuple
 
 import numpy as np
@@ -38,15 +41,17 @@ from pyspark.sql import functions as F
 class _Fence:
     """The caches one operator call takes, released in one place.
 
-    ``hold`` persists a table and runs the one counting action that
-    materializes it: a lazily persisted self-join input is still
-    re-resolved per side when the join is planned (observed
-    nondeterminism until the cache exists).  A table the caller already
-    caches is used as it is and never released here — Spark has no
-    persist refcount, so unpersisting it would evict the caller's cache.
-    Leaving the ``with`` block releases every table held, except those
-    held with ``out=True`` (the call's results, handed to the caller);
-    an exception releases those too."""
+    ``hold`` persists a table and, unless told not to, runs the one
+    counting action that materializes it.  A table read by more than one
+    side of a join — the MinHash ``sig`` re-attached to both pair ids, the
+    store probe's batch — reads one cache that way, instead of being
+    re-resolved per side (observed nondeterminism before the cache
+    exists).  A table the caller already caches is used as it is and
+    never released here — Spark has no persist refcount, so unpersisting
+    it would evict the caller's cache.  Leaving the ``with`` block
+    releases every table held, except those held with ``out=True`` (the
+    call's results, handed to the caller); an exception releases those
+    too."""
 
     def __init__(self):
         self._tmp: list = []
@@ -75,46 +80,35 @@ class _Fence:
         self._tmp.extend(dfs)
 
 
-def _bucket_self_join(fence: _Fence, table: DataFrame, keys: list,
-                      carry: list, max_bucket: int | None) -> DataFrame:
+def _bucket_pairs(table: DataFrame, keys: list, carry: list,
+                  max_bucket: int | None) -> DataFrame:
     """``(id_a, id_b, <c>_a, <c>_b for c in carry)`` for every two rows of
     ``table`` (columns ``_id``, ``keys`` and ``carry``) that share a
     bucket, with ``id_a < id_b``.  A pair sharing several buckets appears
-    once per bucket.
+    once per bucket, and duplicate ``_id`` rows pair once per row.
 
-    The table is held on ``fence``: materialized before the join is
-    planned, and released when the caller's ``with`` block ends — after
-    the caller has materialized its result — or when anything raises.
-
-    ``max_bucket`` drops larger buckets before the join, the standard
-    skew guard: an over-full bucket is boilerplate shared by thousands of
-    rows and would make the join quadratic, while its members still pair
-    through their other buckets.  The hot list is an aggregate plus a
-    BROADCAST anti-join, so the probe rows never shuffle just to be
-    counted; the list is tiny by definition."""
-    table = fence.hold(table)
-    if max_bucket is not None:
-        hot = (table.groupBy(*keys).count()
-                    .where(F.col("count") > max_bucket).select(*keys))
-        table = table.join(F.broadcast(hot), keys, "left_anti")
-    # qualified aliases: joining two renamed projections of the SAME plan
-    # hits Spark's ambiguous-attribute resolution, where both sides can
-    # silently bind to one — nondeterministically
-    ta, tb = table.alias("ta"), table.alias("tb")
-    return (ta.join(tb, _same_bucket("ta", "tb", keys)
-                    & (F.col("ta._id") < F.col("tb._id")))
-              .select(*_pair_cols("ta", "tb", carry)))
-
-
-def _same_bucket(left: str, right: str, keys: list) -> F.Column:
-    return reduce(lambda a, b: a & b,
-                  [F.col(f"{left}.{k}") == F.col(f"{right}.{k}")
-                   for k in keys])
+    One exchange on the bucket key: each bucket collects its rows and
+    pairs them in place, so the table is read once and nothing is held,
+    counted or broadcast.  A bucket whose key has a NULL never pairs (as
+    in an equi-join), and neither does a singleton.  ``max_bucket`` drops
+    buckets of more rows, the standard skew guard: an over-full bucket is
+    boilerplate shared by thousands of rows and would make the pairing
+    quadratic, while its members still pair through their other
+    buckets."""
+    n = F.size("m")
+    kept = n >= 2 if max_bucket is None else n.between(2, max_bucket)
+    buckets = (table.dropna(subset=keys).groupBy(*keys)
+                    .agg(F.collect_list(F.struct("_id", *carry)).alias("m"))
+                    .where(kept))
+    later = F.filter("m", lambda x: x["_id"] > F.col("a._id"))
+    return (buckets.select("m", F.explode("m").alias("a"))
+                   .select("a", F.explode(later).alias("b"))
+                   .select(*_pair_cols("a", "b", carry)))
 
 
 def _pair_cols(left: str, right: str, carry: list) -> list:
-    """``id_a``, ``id_b`` and ``<c>_a``, ``<c>_b`` from the two aliased
-    sides of a bucket join."""
+    """``id_a``, ``id_b`` and ``<c>_a``, ``<c>_b`` from the two sides of
+    a pair: aliased tables of a join, or struct columns."""
     return [F.col(f"{left}._id").alias("id_a"),
             F.col(f"{right}._id").alias("id_b"),
             *[F.col(f"{t}.{c}").alias(f"{c}_{side}") for c in carry
@@ -293,8 +287,8 @@ def minhash_lsh(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     the signature matches exactly.  est_jaccard = fraction of matching
     minhashes (unbiased estimator); filtered at ``jaccard_threshold``.
 
-    ``max_bucket``: buckets larger than this are dropped before the pair
-    join (see ``_bucket_self_join``).
+    ``max_bucket``: buckets of more rows than this never pair (see
+    ``_bucket_pairs``).
 
     Signatures come from ``minhash_signatures_np``, an Arrow
     ``mapInPandas`` kernel — measured 2-3x faster at sf0.1 than the JVM
@@ -330,7 +324,7 @@ def band_table(sig: DataFrame, n_hashes: int = 32,
 def minhash_pairs_from_sig(sig: DataFrame, n_hashes: int = 32,
                            bands: int = 8, jaccard_threshold: float = 0.6,
                            max_bucket: int = 200) -> DataFrame:
-    """Banded pair join + estimate stage of ``minhash_lsh`` over a
+    """Banded bucket-pair + estimate stage of ``minhash_lsh`` over a
     precomputed signature table (columns ``_id``, ``sig array<long>``) —
     callable over a persisted signature artifact so an external oracle can
     re-run the same banding/join/estimate SQL-side (band buckets formed by
@@ -340,14 +334,15 @@ def minhash_pairs_from_sig(sig: DataFrame, n_hashes: int = 32,
     caches are released here; callers owning long sessions may
     ``unpersist()`` it when done."""
     with _Fence() as fence:
-        # no counting action of its own: the band table's count scans every
-        # sig partition, so it fills this cache too (a separate sig.count()
-        # job was measured at ~0.4 s of pure latency per call, round 8)
+        # no counting action of its own: the pair job below is the first to
+        # scan sig, and its band scan fills this cache for both re-attach
+        # joins (a separate sig.count() job was measured at ~0.4 s of pure
+        # latency per call, round 8)
         sig = fence.hold(sig, count=False)
-        # ids travel through the bucket join; signatures re-attach by id
-        pairs = _bucket_self_join(fence, band_table(sig, n_hashes, bands),
-                                  ["band_id", "band_hash"], [], max_bucket
-                                  ).dropDuplicates(["id_a", "id_b"])
+        # ids travel through the buckets; signatures re-attach by id
+        pairs = _bucket_pairs(band_table(sig, n_hashes, bands),
+                              ["band_id", "band_hash"], [], max_bucket
+                              ).dropDuplicates(["id_a", "id_b"])
         out = (pairs.join(_sig_side(sig, "a"), "id_a")
                     .join(_sig_side(sig, "b"), "id_b")
                     .withColumn("est_jaccard", _est_jaccard(n_hashes))
@@ -507,16 +502,15 @@ def pigeonhole_block_table(sig: DataFrame,
 
 def simhash_pairs_from_sig(sig: DataFrame, max_hamming: int = 3,
                            max_bucket: int = 200) -> DataFrame:
-    """Pigeonhole pair join over a precomputed signature table (columns
-    ``_id``, ``simhash``) — the pair-join stage of ``simhash_pairs``,
+    """Pigeonhole bucket pairs over a precomputed signature table (columns
+    ``_id``, ``simhash``) — the pair stage of ``simhash_pairs``,
     callable over a persisted signature artifact so an external oracle can
     re-run the same join SQL-side."""
-    # sig is read once: the block table carries simhash through, so only
-    # the block table is held (two redundant jobs removed, round 8)
+    # sig is read once: the block table carries simhash through the buckets
     with _Fence() as fence:
-        pairs = _bucket_self_join(
-            fence, pigeonhole_block_table(sig, max_hamming),
-            ["block_id", "block_val"], ["simhash"], max_bucket)
+        pairs = _bucket_pairs(pigeonhole_block_table(sig, max_hamming),
+                              ["block_id", "block_val"], ["simhash"],
+                              max_bucket)
         return fence.hold(_within_hamming(pairs, max_hamming), out=True)
 
 
@@ -662,7 +656,7 @@ def _store_pairs(spark, path: str, params: dict, new_sig: DataFrame,
         batch = fam.table(new_sig)
         batch = F.broadcast(batch) if small else batch.hint("merge")
         cross = (stored.alias("s")
-                       .join(batch.alias("b"), _same_bucket("s", "b", fam.keys))
+                       .join(batch.alias("b"), fam.keys)
                        .select(*_pair_cols("s", "b", fam.carry))
                        .where(F.col("id_a") != F.col("id_b")))
         cross = verify(cross, new_sig, live[0], small)

@@ -662,21 +662,19 @@ def knn_pairs_exact(emb: DataFrame, dim: int, n_planes: int = 8,
     """Embedding-cosine near-duplicate pairs within LSH buckets
     (id_a < id_b, cosine >= threshold) — the embedding dedup operator.
 
-    ``max_bucket``: buckets larger than this are dropped before the pair
-    join — the same skew guard as ``dedup.minhash_lsh``.  Sign-LSH on
-    clustered embeddings concentrates rows into few buckets (that's why
-    ``center=`` exists), and one hot bucket makes the within-bucket
-    all-pairs join quadratic.
+    ``max_bucket``: buckets of more rows than this never pair — the same
+    skew guard as ``dedup.minhash_lsh``.  Sign-LSH on clustered embeddings
+    concentrates rows into few buckets (that's why ``center=`` exists),
+    and one hot bucket makes the within-bucket all-pairs step quadratic.
 
     ``center``: a precomputed recentering vector — symmetrical with
     ``with_lsh_bucket``; when None a one-pass ``data_mean`` is computed
     (bounded build-time cost; pass a sampled/stored center at 100 TB so
     no full-table pass happens here).
 
-    The returned DataFrame is eagerly materialized and persisted (so the
-    intermediate bucketed table can be unpersisted here rather than leak);
-    callers owning long sessions may ``unpersist()`` the result when done."""
-    from .dedup import _bucket_self_join, _Fence
+    The returned DataFrame is eagerly materialized and persisted; callers
+    owning long sessions may ``unpersist()`` it when done."""
+    from .dedup import _bucket_pairs, _Fence
     if center is None:
         center = data_mean(emb, dim, vec_col)
     table = with_lsh_bucket(emb, dim, n_planes, seed, vec_col,
@@ -685,7 +683,7 @@ def knn_pairs_exact(emb: DataFrame, dim: int, n_planes: int = 8,
         F.col(vec_col).cast("array<double>").alias("v"), "bucket")
     with _Fence() as fence:
         # one bucket per row, so no pair repeats: no dropDuplicates
-        pairs = _bucket_self_join(fence, table, ["bucket"], ["v"], max_bucket)
+        pairs = _bucket_pairs(table, ["bucket"], ["v"], max_bucket)
         cos = F.round(cosine_sim(F.col("v_a"), F.col("v_b")), 8)
         return fence.hold(pairs.select("id_a", "id_b", cos.alias("cosine"))
                                .where(F.col("cosine") >= threshold), out=True)
