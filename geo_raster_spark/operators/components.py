@@ -178,8 +178,9 @@ def cross_modal_pairs(docs: DataFrame, images: DataFrame,
       in the same ``img:`` namespace.
 
     Scale shape is unchanged from the parts: one signature scan over the
-    union corpus (captions are just more rows), bucket-bounded joins with
-    the same hot-bucket guards.  ``connected_components`` downstream is
+    union corpus (captions are just more rows), and each generator pairs
+    inside its buckets with one exchange on the bucket key and the same
+    hot-bucket guard.  ``connected_components`` downstream is
     id-type-agnostic, so a cluster spanning {doc:…, img:…} collapses to
     one root — a caption-duplicate image cluster merges with its text
     twin even when the two modalities never co-paired directly."""
@@ -191,12 +192,12 @@ def cross_modal_pairs(docs: DataFrame, images: DataFrame,
     corpus = cross_modal_corpus(docs, images, text_col, id_col,
                                 image_id_col, caption_col)
 
-    # the two pair generators are INDEPENDENT jobs with internal
-    # materialization fences (persist+count) — run them concurrently so
-    # one's fence latency back-fills the other's idle executors
-    # (optimization guide §2.6; results are unioned after both finish, so
-    # output is unchanged).  inheritable_thread_target(session) keeps the
-    # job tags and local properties of the calling thread.
+    # the two pair generators are INDEPENDENT jobs, each one bucket
+    # exchange plus the hold that materializes its result — run them
+    # concurrently so one's small jobs back-fill the other's idle
+    # executors (optimization guide §2.6; results are unioned after both
+    # finish, so output is unchanged).  inheritable_thread_target(session)
+    # keeps the job tags and local properties of the calling thread.
     def _text_pairs():
         return dedup.minhash_lsh(corpus, text_col="text", id_col="node_id",
                                  k=k, n_hashes=n_hashes, bands=bands,

@@ -17,13 +17,13 @@ Four tiers, all shuffle-conscious:
 Every bucket family (MinHash bands, SimHash/pHash blocks and the sign-LSH
 buckets of ``similarity.knn_pairs_exact``) pairs rows through
 ``_bucket_pairs``: one exchange on the bucket key, inside which each bucket
-pairs its own rows — singleton and over-full buckets never pair.  Caches
-are taken and released through one ``_Fence``; a family adds only its own
-verification.  The persisted MinHash and pHash signature stores share one
-build / probe / admit / append path; their params sidecar tells the
-families apart.
+pairs its own rows — singleton and over-full buckets are counted, never
+gathered, and never pair.  Caches are taken and released through one
+``_Fence``; a family adds only its own verification.  The persisted
+MinHash and pHash signature stores share one build / probe / admit /
+append path; their params sidecar tells the families apart.
 
-At 100 TB the pair stage's only bucket shuffle is that groupBy on
+At 100 TB the pair stage's only bucket shuffle is that exchange on
 (band_id, band_hash) — bounded, well-distributed keys; pairs form within
 buckets.
 """
@@ -34,7 +34,7 @@ from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -87,23 +87,28 @@ def _bucket_pairs(table: DataFrame, keys: list, carry: list,
     bucket, with ``id_a < id_b``.  A pair sharing several buckets appears
     once per bucket, and duplicate ``_id`` rows pair once per row.
 
-    One exchange on the bucket key: each bucket collects its rows and
-    pairs them in place, so the table is read once and nothing is held,
-    counted or broadcast.  A bucket whose key has a NULL never pairs (as
-    in an equi-join), and neither does a singleton.  ``max_bucket`` drops
-    buckets of more rows, the standard skew guard: an over-full bucket is
+    One exchange on the bucket key, then two windows over each bucket:
+    the first counts its rows, rows of singleton and over-full buckets
+    are dropped, and the second hands every remaining row the list of its
+    bucket's rows to pair with.  An over-full bucket is therefore never
+    gathered: the count's buffer spills to disk.  The table is read once
+    and nothing is held, counted or broadcast.  A bucket whose key has a
+    NULL never pairs (as in an equi-join).  ``max_bucket`` drops buckets
+    of more rows, the standard skew guard: an over-full bucket is
     boilerplate shared by thousands of rows and would make the pairing
     quadratic, while its members still pair through their other
     buckets."""
-    n = F.size("m")
+    bucket = Window.partitionBy(*keys)
+    n = F.col("_n")
     kept = n >= 2 if max_bucket is None else n.between(2, max_bucket)
-    buckets = (table.dropna(subset=keys).groupBy(*keys)
-                    .agg(F.collect_list(F.struct("_id", *carry)).alias("m"))
-                    .where(kept))
+    row = F.struct("_id", *carry)
+    rows = (table.dropna(subset=keys)
+                 .withColumn("_n", F.count("*").over(bucket)).where(kept)
+                 .select(row.alias("a"),
+                         F.collect_list(row).over(bucket).alias("m")))
     later = F.filter("m", lambda x: x["_id"] > F.col("a._id"))
-    return (buckets.select("m", F.explode("m").alias("a"))
-                   .select("a", F.explode(later).alias("b"))
-                   .select(*_pair_cols("a", "b", carry)))
+    return (rows.select("a", F.explode(later).alias("b"))
+                .select(*_pair_cols("a", "b", carry)))
 
 
 def _pair_cols(left: str, right: str, carry: list) -> list:

@@ -289,6 +289,26 @@ def test_bucket_pairs_skip_null_keys(spark):
     want.unpersist()
 
 
+def test_bucket_pairs_drop_hot_bucket_before_collecting(spark):
+    """A bucket far over ``max_bucket`` yields no pair while its members
+    still pair through their other buckets, and it is dropped by the
+    bucket count below the per-bucket ``collect_list`` — never gathered
+    into one list — inside the one exchange on the bucket key."""
+    hot = spark.range(5000).select(F.col("id").alias("_id"),
+                                   F.lit(0).alias("k"),
+                                   F.col("id").alias("c"))
+    small = spark.createDataFrame([(0, 1, 0), (1, 1, 1), (7, 2, 7)],
+                                  "_id long, k int, c long")
+    got = dedup._bucket_pairs(hot.unionByName(small), ["k"], ["c"], 200)
+    # the plan prints top-down: the count and the filter on it lie below
+    # the collect
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    collect, count = plan.index("collect_list"), plan.index("count(1)")
+    assert collect < plan.index("Filter", collect) < count, plan
+    assert sorted(map(tuple, got.collect())) == [(0, 1, 0, 1)]
+
+
 def test_minhash_pairs_run_signature_kernel_once(spark):
     """``minhash_pairs_from_sig`` holds ``sig`` lazily and its pair job
     fills the cache: the signature rows feeding both the buckets and the
