@@ -81,7 +81,12 @@ class CheckpointTable:
     def record_df(self, df: DataFrame, stage: str, key_col: str,
                   job_id: str | None = None) -> str:
         """Distributed variant: checkpoint one row per key directly from a
-        result DataFrame (per-partition lineage without collecting data)."""
+        result DataFrame (per-partition lineage without collecting data).
+
+        This runs one action over ``df``.  A caller that also returns or
+        uses ``df`` should pass a materialized small result, as
+        ``flagship`` does, so the plan is not computed twice; never
+        materialize a payload-carrying table for this."""
         job_id = job_id or uuid.uuid4().hex[:12]
         now = time.time()
         out = (df.groupBy(F.col(key_col).cast("string").alias("key"))

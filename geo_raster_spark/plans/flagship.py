@@ -18,7 +18,12 @@ from ..operators import footprint, pip_join, tile_assign
 
 def flagship(images: DataFrame, zones_pdf, grid: TileGrid | None = None,
              checkpoint=None) -> DataFrame:
-    """-> (zone_id, tile_tag, n_images) counts."""
+    """-> (zone_id, tile_tag, n_images) counts.
+
+    Without ``checkpoint`` the plan is returned lazily.  With it, the
+    counts (a ~10^4-row aggregate) are computed eagerly once with
+    ``localCheckpoint``; the lineage write and the returned frame both
+    read those blocks, so the probe pipeline runs once, not twice."""
     from .. import functions as gf
 
     grid = grid or TileGrid()
@@ -35,6 +40,7 @@ def flagship(images: DataFrame, zones_pdf, grid: TileGrid | None = None,
                                gf.tile_tag(F.col("tile_col"), F.col("tile_row")))
                    .drop("tile_col", "tile_row"))
     if checkpoint is not None:
+        counts = counts.localCheckpoint()
         checkpoint.record_df(counts, stage="flagship", key_col="tile_tag")
     return counts
 

@@ -160,6 +160,33 @@ def test_checkpoint_resume(spark, tmp_path):
     assert "h003v003" in done2
 
 
+def test_checkpointed_flagship_runs_probe_once(spark, tmp_path):
+    """With ``checkpoint`` the flagship computes its counts once: the
+    lineage write and the caller's action read the same materialized
+    result, whose rows equal the plain plan's and whose per-key row
+    counts are the checkpoint rows."""
+    images = flagship.footprint_input(spark, N, 8)
+    zones = synth.zones_pandas(24, hot=True)
+    computed = spark.sparkContext.accumulator(0)
+
+    def counted(it):
+        for pdf in it:
+            computed.add(len(pdf))
+            yield pdf
+
+    cp = CheckpointTable(str(tmp_path / "cp"))
+    got = flagship.flagship(images.mapInPandas(counted, images.schema), zones,
+                            checkpoint=cp).collect()
+    assert got and computed.value == N
+    assert sorted(got) == sorted(flagship.flagship(images, zones).collect())
+    tags = pd.Series([r["tile_tag"] for r in got]).value_counts()
+    done = {r["key"] for r in cp.completed_keys(spark, "flagship").collect()}
+    assert done == set(tags.index)
+    rows = {r["key"]: r["row_count"]
+            for r in cp.read(spark).where(F.col("stage") == "flagship").collect()}
+    assert rows == tags.to_dict()
+
+
 def test_tile_cut_matches_kernel_mosaic(spark):
     """G5 pipeline vs direct kernel composition on one tile."""
     n = 400  # at 40 images no tile stacked 2 images — the mosaic was vacuous
