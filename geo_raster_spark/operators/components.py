@@ -8,21 +8,20 @@ must collapse to ONE survivor even though A and C never paired directly.
 
 ``connected_components`` implements the alternating large-star /
 small-star algorithm (Kiveris et al., "Connected Components in MapReduce
-and Beyond", SoCC 2014 — public literature): each iteration is two
-groupBy/join rounds over the edge list, converging in O(log n) iterations
-REGARDLESS of component diameter (plain min-label propagation needs
-O(diameter) rounds — a pathological near-dup chain at 100 TB could be
-millions long).  At the fixpoint every component is a star whose center
-is its minimum node id.
+and Beyond", SoCC 2014 — public literature): each round is two window
+steps over the edge list, converging in O(log n) rounds REGARDLESS of
+component diameter (plain min-label propagation needs O(diameter)
+rounds — a pathological near-dup chain at 100 TB could be millions
+long).  It stops at the first star forest (every component a star whose
+center is its minimum node id — the fixpoint), with no confirming round.
 
-Scale shape per iteration: two shuffles on node id (well-distributed —
-these are doc/image ids, and AQE splits any residual skew), edge count
-never exceeds the input edge count after the first canonicalization, and
-each iteration's result is eagerly localCheckpoint-ed so both the data
-AND the logical plan stay O(1) deep (an iterated self-join otherwise
-doubles its plan every round).  Convergence is detected by an aggregate
-signature (count + bit_xor of edge hashes) confirmed by one exact
-``subtract`` check when the signature first repeats.
+Scale shape per round: three exchanges keyed on node ids (a window on u
+per star step, one distinct; doc/image ids are well-distributed, and a
+hub's rows share one window partition, which spills), edge count never
+exceeds the input edge count after the first canonicalization, and each
+round is localCheckpoint-ed so both the data AND the logical plan stay
+O(1) deep.  One aggregate over node roles per round materializes that
+checkpoint and decides whether the edges form a star forest yet.
 
 No SQL oracle can express the iteration, but the driver query d6 writes
 the PAIR artifact and DuckDB re-derives the same components with a
@@ -46,13 +45,18 @@ def _canon(e: DataFrame) -> DataFrame:
              .distinct())
 
 
-def _sig(e: DataFrame):
-    """Cheap order-insensitive edge-set signature: (count, xor of hashes).
-    Exactness is NOT assumed — a matching signature only triggers the one
-    exact subtract check in the loop below."""
-    row = e.select(F.count("*").alias("n"),
-                   F.expr("bit_xor(xxhash64(u, v))").alias("x")).collect()[0]
-    return (row["n"], row["x"])
+def _star_check(e: DataFrame):
+    """(edge count, is_star_forest) of a canonical edge set, in one job:
+    a star forest iff every node that is some edge's larger end ``u``
+    touches no other edge.  As ``u > v``, each centre is then its star's
+    minimum — a fixpoint of both star steps."""
+    row = (e.selectExpr("inline(array(struct(u AS n, 1 AS is_u), "
+                        "struct(v AS n, 0 AS is_u)))")
+            .groupBy("n").agg(F.sum("is_u").alias("nu"),
+                              F.count("*").alias("c"))
+            .selectExpr("sum(nu) AS edges", "bool_or(nu > 0 AND c > 1) AS bad")
+            .collect()[0])
+    return row["edges"] or 0, not row["bad"]
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
@@ -64,70 +68,61 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     ``dedup_corpus`` keeps them via the anti-join).
 
     Works over long OR string ids (only ``<`` ordering is used).  Pass a
-    dict as ``stats`` to receive ``iterations`` (star rounds to
-    convergence) and ``edges`` (input edge count after canonicalization)
-    — the bench's rounds-to-convergence evidence."""
+    dict as ``stats`` to receive ``iterations`` (star rounds run before
+    the first star forest — 0 when the input is one) and ``edges`` (input
+    edge count after canonicalization) — the bench's rounds evidence."""
     e = _canon(pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")))
-    # localCheckpoint (NOT just persist): each iteration self-joins the
-    # previous result, so without truncation the LOGICAL PLAN doubles per
+    # localCheckpoint (NOT just persist): each round windows over the
+    # previous result, so without truncation the LOGICAL PLAN grows per
     # round — analysis/optimization time explodes long before the data
     # does.  Checkpointing materializes the blocks AND cuts the lineage,
-    # keeping every iteration's plan O(1) deep.  (On a real cluster with
+    # keeping every round's plan O(1) deep.  (On a real cluster with
     # executor loss concerns, set a reliable checkpoint dir; the shape is
-    # identical.)
-    # LAZY checkpoint + one _sig job (round 8): the signature aggregation
-    # is the action that materializes the checkpoint blocks, so each round
-    # runs ONE job instead of eager-checkpoint + signature + (initially)
-    # an emptiness probe — three jobs' latency folded into one; _sig's
-    # count doubles as the empty check.
+    # identical.)  The checkpoint is LAZY: _star_check's one job
+    # materializes it, and its edge count doubles as the empty check.
     e = e.localCheckpoint(eager=False)
-    prev, prev_sig = e, _sig(e)
-    if prev_sig[0] == 0:
+    n_edges, star = _star_check(e)
+    if n_edges == 0:
         schema_src = pairs.select(F.col(id_a).alias("node"),
                                   F.col(id_a).alias("root"))
         return schema_src.limit(0)
 
-    if stats is not None:
-        stats["edges"] = prev_sig[0]
-    for it in range(max_iter):
+    it = 0
+    while not star:
+        if it == max_iter:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} "
+                "large/small-star iterations (O(log n) expected — this "
+                "indicates a bug, not a data property)")
         # -- large-star: for each u over the UNDIRECTED neighborhood,
-        #    m = min(N(u) + {u}); emit (v, m) for the LARGER neighbors only
-        nbrs = prev.unionByName(
-            prev.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = (nbrs.groupBy("u").agg(F.min("v").alias("mv"))
-                    .select("u", F.least("mv", "u").alias("m")))
-        ls = _canon(nbrs.join(mins, "u")
-                        .where(F.col("v") > F.col("u"))
-                        .select(F.col("v").alias("u"), F.col("m").alias("v")))
-        # -- small-star: edges already canonical (u > v); for each u,
+        #    m = min(N(u) + {u}); emit (v, m) for the LARGER neighbors only.
+        #    m <= u < v, so every row is already canonical; duplicates are
+        #    harmless to small-star's min and removed by its _canon.
+        nbrs = e.unionByName(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        ls = (nbrs.withColumn("m", F.least(
+                      F.min("v").over(Window.partitionBy("u")), "u"))
+                  .where(F.col("v") > F.col("u"))
+                  .select(F.col("v").alias("u"), F.col("m").alias("v")))
+        # -- small-star: edges canonical (u > v); for each u,
         #    m = min of its smaller neighbors; rewire them all (and u) to m
-        smins = ls.groupBy("u").agg(F.min("v").alias("m"))
-        j = ls.join(smins, "u")
+        j = ls.withColumn("m", F.min("v").over(Window.partitionBy("u")))
         ss = _canon(j.select(F.col("u"), F.col("m").alias("v"))
                      .unionByName(
                          j.where(F.col("v") != F.col("m"))
                           .select(F.col("v").alias("u"),
                                   F.col("m").alias("v"))))
-        cur = ss.localCheckpoint(eager=False)
-        cur_sig = _sig(cur)   # one job: materializes the checkpoint too
-        if cur_sig == prev_sig and \
-                cur.subtract(prev).limit(1).count() == 0:
-            prev = cur
-            if stats is not None:
-                stats["iterations"] = it + 1
-            break
-        prev, prev_sig = cur, cur_sig
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "large/small-star iterations (O(log n) expected — this "
-            "indicates a bug, not a data property)")
+        e = ss.localCheckpoint(eager=False)
+        _, star = _star_check(e)   # one job: materializes the checkpoint
+        it += 1
+    if stats is not None:
+        stats.update(edges=n_edges, iterations=it)
 
-    # fixpoint: every edge is (member, component-min); roots map to
+    # star forest: every edge is (member, component-min); roots map to
     # themselves.  A root never appears on the u side of a star.
-    comp = prev.select(F.col("u").alias("node"), F.col("v").alias("root"))
-    roots = (prev.select(F.col("v").alias("node")).distinct()
-                 .withColumn("root", F.col("node")))
+    comp = e.select(F.col("u").alias("node"), F.col("v").alias("root"))
+    roots = (e.select(F.col("v").alias("node")).distinct()
+              .withColumn("root", F.col("node")))
     return comp.unionByName(roots)
 
 
@@ -247,8 +242,8 @@ def cross_modal_dedup(docs: DataFrame, images: DataFrame,
         caption_col=pair_kwargs.get("caption_col", "caption"))
     pairs = cross_modal_pairs(docs, images, **pair_kwargs)
     # connected_components checkpoints its edge input lazily, and its
-    # first _sig job materializes that checkpoint — so the persisted pair
-    # table can be released before survivor selection
+    # first star-forest check materializes that checkpoint — so the
+    # persisted pair table can be released before survivor selection
     comp = connected_components(pairs)
     pairs.unpersist()
     return dedup_corpus(corpus, pairs, id_col="node_id",

@@ -30,10 +30,10 @@ def _union_find(pairs):
     return {n: find(n) for n in parent}
 
 
-def _cc_dict(spark, pairs):
+def _cc_dict(spark, pairs, **kw):
     pdf = pd.DataFrame(pairs, columns=["id_a", "id_b"])
     df = spark.createDataFrame(pdf)
-    out = cc.connected_components(df)
+    out = cc.connected_components(df, **kw)
     got = {r["node"]: r["root"] for r in out.collect()}
     out.unpersist()
     return got
@@ -160,20 +160,48 @@ def test_phash_pairs_planted_near_dups(spark):
 
 def test_components_clique_and_hub_skew(spark):
     """Degree skew: a 60-node clique (1,770 pairs) plus a 50-leaf hub
-    star — the shapes boilerplate dedup actually produces.  Both must
-    collapse to single components quickly (well under max_iter) and
-    match union-find."""
+    star — the shapes boilerplate dedup actually produces — and a
+    20,000-leaf hub with a 30-link chain hanging off one leaf, which puts
+    one large partition under each star step's ``Window.partitionBy("u")``.
+    All must collapse to single components quickly (well under max_iter)
+    and match union-find."""
     clique = [(i, j) for i in range(100, 160) for j in range(100, i)]
     hub = [(5000, 5000 + k) for k in range(1, 51)]
-    pairs = clique + hub
-    want = _union_find(pairs)
-    stats = {}
-    pdf = pd.DataFrame(pairs, columns=["id_a", "id_b"])
-    out = cc.connected_components(spark.createDataFrame(pdf), stats=stats)
-    got = {r["node"]: r["root"] for r in out.collect()}
-    assert got == want
-    assert set(got.values()) == {100, 5000}
-    assert stats["iterations"] <= 6
+    big_hub = [(10**6, 10**6 + k) for k in range(1, 20_001)]
+    tail = [(10**6 + 7 + 10**5 * i, 10**6 + 7 + 10**5 * (i + 1))
+            for i in range(30)]
+    for pairs, roots in (
+            (clique + hub, {100, 5000}),
+            (big_hub + tail, {10**6})):
+        stats = {}
+        got = _cc_dict(spark, pairs, stats=stats)
+        assert got == _union_find(pairs)
+        assert set(got.values()) == roots
+        assert stats["iterations"] <= 6
+
+
+def test_components_stop_at_first_star_forest(spark):
+    """The loop stops at the first star forest: no confirming round, and
+    an input that already is one runs no star round at all.  Also pins the
+    Spark jobs of a call (the chain's one round included) and the
+    ``max_iter`` guard."""
+    jsc = spark.sparkContext._jsc.sc()
+    disjoint, chain = [(1, 2), (3, 4)], [(10, 20), (20, 30)]
+    for pairs, rounds in ((disjoint, 0), (chain, 1)):
+        df = spark.createDataFrame(pd.DataFrame(pairs,
+                                                columns=["id_a", "id_b"]))
+        stats = {}
+        job0 = jsc.dagScheduler().nextJobId()
+        got = {r["node"]: r["root"] for r in
+               cc.connected_components(df, stats=stats).collect()}
+        jobs = jsc.dagScheduler().nextJobId() - job0
+        assert got == _union_find(pairs)
+        assert stats["iterations"] == rounds
+        assert jobs <= 12, jobs
+
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _cc_dict(spark, chain, max_iter=0)
+    assert _cc_dict(spark, disjoint, max_iter=0) == _union_find(disjoint)
 
 
 def test_phash_dedup_corpus_end_to_end(spark):

@@ -80,3 +80,16 @@ def test_retired_j6_crossjoin_twin_matches_kring(spark):
     got = [(r["n_nationkey"], r["rank"], r["c_custkey"], r["dist2"])
            for r in twin]
     assert got == [tuple(w) for w in want]
+
+
+def test_check_oracle_rejects_unknown_query():
+    """A mistyped query name must fail the correctness gate, not report
+    "0 pass, 0 fail" — and fail fast, before any Spark session starts."""
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "check_oracle.py"),
+         "d6", "no_such_query"],
+        capture_output=True, text=True, timeout=60)
+    assert r.returncode != 0
+    assert "unknown queries: d6, no_such_query" in r.stderr
+    assert "d6_dedup_corpus" in r.stderr    # the valid names are listed
+    assert "pass" not in r.stdout

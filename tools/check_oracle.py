@@ -9,6 +9,7 @@ DuckDB over the same parquet tables, then compares:
     floats rounded to 9 significant-ish decimals before hashing)
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+(an unknown query name exits 2 before any Spark session starts)
 """
 
 from __future__ import annotations
@@ -52,6 +53,15 @@ def main():
     only = set(args[1:]) if args and os.path.isdir(args[0]) else set(args)
 
     import __spark_entry__ as entry_mod
+
+    qs = entry_mod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        # a typo must not pass the gate as "0 pass, 0 fail"
+        print(f"unknown queries: {', '.join(unknown)}\n"
+              f"valid queries: {', '.join(qs)}", file=sys.stderr)
+        sys.exit(2)
+
     from geo_raster_spark.session import get_spark
 
     spark = get_spark(app_name="oracle-check")
@@ -63,7 +73,6 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     n_pass = n_fail = 0
     for name, fn in qs.items():

@@ -127,9 +127,9 @@ def main():
     if "Window" not in p6:
         failures.append("asof: expected the carry-forward Window")
 
-    # 6b. connected components (round 6): the star rounds are hash/sort
-    # joins on node ids — never a cartesian — and the survivor anti-join
-    # broadcasts the (small) loser side
+    # 6b. connected components (round 6): the star steps are windows on
+    # node ids — never a join, so never a cartesian — and the survivor
+    # anti-join broadcasts the (small) loser side
     import pandas as pd
 
     from geo_raster_spark.operators import components as cc_op
