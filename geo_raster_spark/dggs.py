@@ -68,11 +68,6 @@ def cell_to_bbox(cell):
     return minx, maxy - ch, minx + cw, maxy
 
 
-def cell_center(cell):
-    minx, miny, maxx, maxy = cell_to_bbox(cell)
-    return (minx + maxx) / 2.0, (miny + maxy) / 2.0
-
-
 def parent(cell, parent_res):
     res, col, row = unpack(cell)
     shift = np.asarray(res, dtype=np.int64) - parent_res

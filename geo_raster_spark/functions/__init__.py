@@ -9,8 +9,8 @@ so driver-side oracles and executor-side plans agree exactly.
 
 Note: SplitMix64 needs Java-style wrapping long multiplication, so the
 session must run with ``spark.sql.ansi.enabled=false`` (set by
-``session.get_spark``); the pandas-UDF fallbacks in ``operators.footprint``
-do not have this requirement.
+``session.get_spark`` and ``__spark_entry__``); ``operators.footprint``
+and ``plans.flagship.footprint_input`` depend on it.
 """
 
 from __future__ import annotations
@@ -20,14 +20,6 @@ from pyspark.sql import functions as F
 
 from ..dggs import DEFAULT_RES
 from ..synth import CELL_SIZE
-
-_TWO64 = float(2 ** 64)
-
-
-def _u(x: Column) -> Column:
-    """Unsigned interpretation of a signed int64 column as double in [0, 2^64)."""
-    return x.cast("double") + F.when(x < 0, F.lit(_TWO64)).otherwise(F.lit(0.0))
-
 
 def splitmix64(x: Column) -> Column:
     """Column twin of ``synth.splitmix64`` (wrapping 64-bit arithmetic)."""
@@ -147,18 +139,6 @@ def tile_cover_ranges(minx: Column, miny: Column, maxx: Column, maxy: Column,
 def tile_tag(col: Column, row: Column) -> Column:
     """``h%03dv%03d``  [ref: lib/global_task.py:225-232]"""
     return F.format_string("h%03dv%03d", col, row)
-
-
-def point_tile(lon: Column, lat: Column, image_size: int = 100,
-               cell_size: float = CELL_SIZE, p: float = 180.0) -> tuple:
-    """(tile_col, tile_row) containing a point."""
-    ts = image_size * cell_size
-    n_cols = int(2 * p / ts)
-    col = F.least(F.greatest(F.floor((lon + F.lit(p)) / F.lit(ts)), F.lit(0)),
-                  F.lit(n_cols - 1)).cast("int")
-    row = F.least(F.greatest(F.floor((F.lit(p / 2) - lat) / F.lit(ts)), F.lit(0)),
-                  F.lit(n_cols // 2 - 1)).cast("int")
-    return col, row
 
 
 # ---------------------------------------------------------------------------

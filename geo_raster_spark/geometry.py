@@ -74,18 +74,6 @@ def ring_area(ring):
     return 0.5 * float(np.sum(x[:-1] * y[1:] - x[1:] * y[:-1]))
 
 
-def ring_centroid(ring):
-    r = ring_close(ring)
-    x, y = r[:, 0], r[:, 1]
-    cross = x[:-1] * y[1:] - x[1:] * y[:-1]
-    a = cross.sum() / 2.0
-    if abs(a) < 1e-300:
-        return float(x[:-1].mean()), float(y[:-1].mean())
-    cx = float(np.sum((x[:-1] + x[1:]) * cross) / (6.0 * a))
-    cy = float(np.sum((y[:-1] + y[1:]) * cross) / (6.0 * a))
-    return cx, cy
-
-
 def segment_ratio(ring, n):
     """Densify each edge into ``n`` segments.
 
@@ -397,7 +385,3 @@ def wkb_to_ring(wkb: bytes):
     (npts,) = struct.unpack_from(fmt + "I", wkb, 9)
     arr = np.frombuffer(wkb, dtype=fmt + "f8", count=npts * 2, offset=13)
     return arr.reshape(npts, 2).copy()
-
-
-def point_to_wkb(x, y) -> bytes:
-    return struct.pack("<BI", 1, 1) + struct.pack("<dd", x, y)

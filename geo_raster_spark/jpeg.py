@@ -30,6 +30,11 @@ single-component DC scans with sampling factors (T.81 Annex G).
 ``encode_progressive`` emits a 4-mode scan script as the decoder's
 cross-path parity twin.  Arithmetic coding and hierarchical (SOF9+)
 still raise.
+
+One entropy path each way: the baseline coder is vectorized
+(``_entropy_vector``) and the interleaved baseline decoder is LUT-driven
+(``_baseline_zz``); their per-symbol parity oracles live in
+``tests/oracles.py``.
 """
 
 from __future__ import annotations
@@ -197,43 +202,6 @@ class _BitWriter:
             self.nbits = 0
 
 
-def _entropy_scalar(zz: np.ndarray, dc: np.ndarray) -> bytes:
-    """Reference (scalar) entropy coder — kept as the parity oracle for the
-    vectorized coder below.  ``dc`` = per-block DC DIFFS (prediction applied
-    by the caller: sequential for grayscale, per-component chains for
-    interleaved color MCUs)."""
-    sizes_dc = _category(dc)
-    sizes_ac = _category(zz[:, 1:])
-    bw_ = _BitWriter()
-    for i in range(zz.shape[0]):
-        s = int(sizes_dc[i])
-        c, ln = _DC_ENC[s]
-        bw_.write(c, ln)
-        if s:
-            v = int(dc[i])
-            bw_.write(v if v > 0 else v + (1 << s) - 1, s)
-        row = zz[i, 1:]
-        nz = np.nonzero(row)[0]
-        pos = 0
-        for j in nz:
-            run = int(j) - pos
-            while run >= 16:
-                c, ln = _AC_ENC[0xF0]                            # ZRL
-                bw_.write(c, ln)
-                run -= 16
-            s = int(sizes_ac[i, j])
-            c, ln = _AC_ENC[(run << 4) | s]
-            bw_.write(c, ln)
-            v = int(row[j])
-            bw_.write(v if v > 0 else v + (1 << s) - 1, s)
-            pos = int(j) + 1
-        if pos < 63:
-            c, ln = _AC_ENC[0x00]                                # EOB
-            bw_.write(c, ln)
-    bw_.flush()
-    return bytes(bw_.buf)
-
-
 # symbol -> (code, length) as flat arrays for the vectorized coder
 _DC_CODE = np.zeros(12, np.int64)
 _DC_LEN = np.zeros(12, np.int64)
@@ -268,8 +236,10 @@ def _pack_bits(vals: np.ndarray, nbits: np.ndarray) -> np.ndarray:
 def _entropy_vector(zz: np.ndarray, dc: np.ndarray) -> bytes:
     """Vectorized entropy coder: build the full emission sequence (DC, ZRLs,
     AC run/size symbols, EOBs) as flat arrays, then one bit-packing pass.
-    Byte-identical to ``_entropy_scalar`` (asserted in tests).  ``dc`` =
-    per-block DC diffs, prediction applied by the caller."""
+    Byte-identical to the per-symbol reference coder in ``tests/oracles.py``
+    (asserted in tests).  ``dc`` = per-block DC DIFFS, prediction applied
+    by the caller (sequential for grayscale, per-component chains for
+    interleaved color MCUs)."""
     nb = zz.shape[0]
     dc = np.asarray(dc, dtype=np.int64)
     s_dc = _category(dc).astype(np.int64)
@@ -395,17 +365,15 @@ def _interleaved_dc(zz: np.ndarray, pattern) -> np.ndarray:
     return dc
 
 
-def _encode_scan(zz: np.ndarray, pattern, restart_interval: int,
-                 _scalar: bool) -> bytes:
+def _encode_scan(zz: np.ndarray, pattern, restart_interval: int) -> bytes:
     """Entropy-coded scan, optionally split at restart intervals: every Ri
     MCUs the DC predictors reset, the bitstream 1-pads to a byte boundary,
     and an RSTn marker (n cycling 0..7) separates the segments — T.81
     §B.2.1.2 (restart markers are emitted RAW, never byte-stuffed)."""
-    coder = _entropy_scalar if _scalar else _entropy_vector
     bpm = len(pattern)
     n_mcu = zz.shape[0] // bpm
     if not restart_interval:
-        return coder(zz, _interleaved_dc(zz, pattern))
+        return _entropy_vector(zz, _interleaved_dc(zz, pattern))
     out = bytearray()
     n = seg = 0
     while n < n_mcu:
@@ -413,7 +381,7 @@ def _encode_scan(zz: np.ndarray, pattern, restart_interval: int,
         chunk = zz[n * bpm:(n + m) * bpm]
         if n:
             out += bytes([0xFF, 0xD0 + ((seg - 1) % 8)])
-        out += coder(chunk, _interleaved_dc(chunk, pattern))
+        out += _entropy_vector(chunk, _interleaved_dc(chunk, pattern))
         n += m
         seg += 1
     return bytes(out)
@@ -422,7 +390,7 @@ def _encode_scan(zz: np.ndarray, pattern, restart_interval: int,
 _SUBSAMPLINGS = {"444": (1, 1), "422": (2, 1), "420": (2, 2)}
 
 
-def encode(arr: np.ndarray, quality: int = 90, _scalar: bool = False,
+def encode(arr: np.ndarray, quality: int = 90,
            restart_interval: int = 0, subsampling: str = "444") -> bytes:
     """(H, W) uint8 grayscale or (H, W, 3) uint8 RGB -> baseline JFIF bytes.
 
@@ -452,7 +420,7 @@ def encode(arr: np.ndarray, quality: int = 90, _scalar: bool = False,
             zz = np.empty((nb * 3, 64), dtype=np.int64)
             for c, z in enumerate(zzs):
                 zz[c::3] = z
-            scan = _encode_scan(zz, [0, 1, 2], restart_interval, _scalar)
+            scan = _encode_scan(zz, [0, 1, 2], restart_interval)
             head = _headers(h, w, qts, comps, restart_interval)
             return head + scan + b"\xFF\xD9"
         # subsampled: MCU = (8*vy, 8*hy) px of Y + one block per chroma.
@@ -473,7 +441,7 @@ def encode(arr: np.ndarray, quality: int = 90, _scalar: bool = False,
         zz = np.concatenate([zzy] + zzc, axis=1) \
             .reshape(my * mx * (vy * hy + 2), 64).astype(np.int64)
         pattern = [0] * (vy * hy) + [1, 2]
-        scan = _encode_scan(zz, pattern, restart_interval, _scalar)
+        scan = _encode_scan(zz, pattern, restart_interval)
         head = _headers(h, w, qts, comps, restart_interval,
                         sampling=[(hy, vy), (1, 1), (1, 1)])
         return head + scan + b"\xFF\xD9"
@@ -483,7 +451,7 @@ def encode(arr: np.ndarray, quality: int = 90, _scalar: bool = False,
     h, w = arr.shape
     qt = quant_table(quality)
     zz = _plane_zz(arr.astype(np.float64), qt)
-    scan = _encode_scan(zz.astype(np.int64), [0], restart_interval, _scalar)
+    scan = _encode_scan(zz.astype(np.int64), [0], restart_interval)
     head = _headers(h, w, [qt.reshape(64)[_ZZ].astype(np.uint8)], [(1, 0)],
                     restart_interval)
     return head + scan + b"\xFF\xD9"
@@ -748,7 +716,7 @@ def _lut_cached(table):
 def _scan_windows(scan: bytes) -> np.ndarray:
     """Entropy-coded segment -> uint16 array W where W[i] = the 16 bits
     starting at BIT offset i (stuffed 0x00 removed, stream cut at the first
-    marker, zero-padded past the end like the scalar reader)."""
+    marker, zero-padded past the end like ``_BitReader``)."""
     raw = np.frombuffer(scan, np.uint8)
     is_ff = raw[:-1] == 0xFF
     marker = np.nonzero(is_ff & (raw[1:] != 0))[0]
@@ -1005,14 +973,13 @@ def _progressive_scan(scan_bytes, scan_comps, sof_comps, coefs, huff_dc,
         done += m
 
 
-def decode(data: bytes, _scalar: bool = False) -> np.ndarray:
+def decode(data: bytes) -> np.ndarray:
     """Baseline-sequential or progressive JFIF -> (H, W) uint8 grayscale
     or (H, W, 3) uint8 RGB.
 
     Entropy decode uses a 16-bit-peek LUT over a precomputed bit-window
-    array (one O(1) lookup per symbol); ``_scalar=True`` selects the
-    reference per-bit reader kept as the parity oracle (progressive scans
-    always use the per-bit reader).
+    array (one O(1) lookup per symbol); progressive and non-interleaved
+    scans use the per-bit reader.
 
     Corrupt/truncated streams fail CLEANLY: mechanical errors from
     malformed headers or impossible symbols (short segment buffers,
@@ -1021,7 +988,7 @@ def decode(data: bytes, _scalar: bool = False) -> np.ndarray:
     contains dirty payloads, and executors must raise, not leak
     struct/index internals."""
     try:
-        return _decode_impl(data, _scalar)
+        return _decode_impl(data)
     except (ValueError, NotImplementedError):
         raise
     except (struct.error, IndexError, KeyError, OverflowError) as e:
@@ -1029,7 +996,7 @@ def decode(data: bytes, _scalar: bool = False) -> np.ndarray:
             f"corrupt or truncated JPEG ({type(e).__name__}: {e})") from e
 
 
-def _decode_impl(data: bytes, _scalar: bool) -> np.ndarray:
+def _decode_impl(data: bytes) -> np.ndarray:
     if data[:2] != b"\xFF\xD8":
         raise ValueError("not a JPEG (no SOI)")
     pos = 2
@@ -1158,7 +1125,6 @@ def _decode_impl(data: bytes, _scalar: bool) -> np.ndarray:
     if scan_start is None or h is None:
         raise ValueError("truncated JPEG")
 
-    ncomp = len(sof_comps)
     # general sampling (T.81 A.1.1, A.2.3): MCU covers 8*Hmax x 8*Vmax
     # pixels; component c contributes hi x vi raster-ordered blocks per MCU
     hmax = max(hi for _c, _t, hi, _v in sof_comps)
@@ -1178,92 +1144,8 @@ def _decode_impl(data: bytes, _scalar: bool) -> np.ndarray:
     # the bitstream re-aligns at each one (T.81 §B.2.1.2)
     segments = (_split_restart_segments(scan_bytes) if restart_ri
                 else [scan_bytes])
-    if _scalar:
-        dcts = [_build_decode(*huff_dc[td]) for _ci, td, _ta in scan_comps]
-        acts = [_build_decode(*huff_ac[ta]) for _ci, _td, ta in scan_comps]
-        mcu_done = 0
-        for seg_bytes in segments:
-            if mcu_done >= n_mcu:
-                break
-            m = min(restart_ri, n_mcu - mcu_done) if restart_ri else n_mcu
-            preds = [0] * ncomp
-            br = _BitReader(seg_bytes)
-            for i in range(mcu_done * bpm, (mcu_done + m) * bpm):
-                c = comp_of[i % bpm]
-                s = _huff_read(br, dcts[c])
-                diff = _extend(br.read(s), s) if s else 0
-                preds[c] += diff
-                zz[i, 0] = preds[c]
-                k = 1
-                while k < 64:
-                    rs = _huff_read(br, acts[c])
-                    r, s = rs >> 4, rs & 0x0F
-                    if rs == 0x00:                                   # EOB
-                        break
-                    if rs == 0xF0:                                   # ZRL
-                        k += 16
-                        continue
-                    k += r
-                    if k > 63:
-                        break
-                    zz[i, k] = _extend(br.read(s), s)
-                    k += 1
-            mcu_done += m
-    else:
-        dluts = [_lut_cached(huff_dc[td]) for _ci, td, _ta in scan_comps]
-        aluts = [_lut_cached(huff_ac[ta]) for _ci, _td, ta in scan_comps]
-        oi = []  # flat zz indices of nonzero coefficients
-        ov = []
-        mcu_done = 0
-        for seg_bytes in segments:
-            if mcu_done >= n_mcu:
-                break
-            m = min(restart_ri, n_mcu - mcu_done) if restart_ri else n_mcu
-            preds = [0] * ncomp
-            Wl = _scan_windows(seg_bytes).tolist()  # plain-int indexing
-            nW = len(Wl)
-            cur = 0
-            oi_app, ov_app = oi.append, ov.append
-            for i in range(mcu_done * bpm, (mcu_done + m) * bpm):
-                if cur >= nW:
-                    break  # truncated stream: remaining blocks stay zero
-                c = comp_of[i % bpm]
-                apk = aluts[c]
-                p = dluts[c][Wl[cur]]
-                if p < 256:
-                    raise ValueError("invalid Huffman code")
-                s = p & 0xFF
-                cur += p >> 8
-                if s:
-                    v = Wl[cur] >> (16 - s) if cur < nW else 0
-                    cur += s
-                    preds[c] += v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-                base = i << 6
-                oi_app(base)
-                ov_app(preds[c])
-                k = 1
-                while k < 64 and cur < nW:
-                    p = apk[Wl[cur]]
-                    if p < 256:
-                        raise ValueError("invalid Huffman code")
-                    rs = p & 0xFF
-                    cur += p >> 8
-                    if rs == 0x00:                                   # EOB
-                        break
-                    if rs == 0xF0:                                   # ZRL
-                        k += 16
-                        continue
-                    k += rs >> 4
-                    s = rs & 0x0F
-                    v = Wl[cur] >> (16 - s) if cur < nW else 0
-                    cur += s
-                    if k > 63:
-                        break
-                    oi_app(base + k)
-                    ov_app(v if v >= (1 << (s - 1)) else v - (1 << s) + 1)
-                    k += 1
-            mcu_done += m
-        zz.ravel()[oi] = ov
+    specs = [(huff_dc[td], huff_ac[ta]) for _ci, td, ta in scan_comps]
+    _baseline_zz(segments, specs, comp_of, bpm, n_mcu, restart_ri, zz)
 
     zz4 = zz.reshape(mcus_y, mcus_x, bpm, 64)
     zc_list, off = [], 0
@@ -1277,6 +1159,68 @@ def _decode_impl(data: bytes, _scalar: bool) -> np.ndarray:
                        .reshape(mcus_y * vi, mcus_x * hi, 64))
         off += cnt
     return _pixels_from_zc(zc_list, sof_comps, qts, h, w, hmax, vmax)
+
+
+def _baseline_zz(segments, specs, comp_of, bpm, n_mcu, restart_ri, zz):
+    """Entropy-decode an interleaved baseline scan into ``zz`` (n_blocks,
+    64), MCU-major with ``comp_of[i % bpm]`` the component of block i.
+    ``specs`` = per-component (DC, AC) Huffman tables as (bits, vals);
+    ``segments`` = the scan split at RSTn markers (DC predictors reset at
+    each one).  A truncated stream leaves the remaining blocks zero."""
+    dluts = [_lut_cached(dc) for dc, _ac in specs]
+    aluts = [_lut_cached(ac) for _dc, ac in specs]
+    oi = []  # flat zz indices of nonzero coefficients
+    ov = []
+    mcu_done = 0
+    for seg_bytes in segments:
+        if mcu_done >= n_mcu:
+            break
+        m = min(restart_ri, n_mcu - mcu_done) if restart_ri else n_mcu
+        preds = [0] * len(specs)
+        Wl = _scan_windows(seg_bytes).tolist()  # plain-int indexing
+        nW = len(Wl)
+        cur = 0
+        oi_app, ov_app = oi.append, ov.append
+        for i in range(mcu_done * bpm, (mcu_done + m) * bpm):
+            if cur >= nW:
+                break  # truncated stream: remaining blocks stay zero
+            c = comp_of[i % bpm]
+            apk = aluts[c]
+            p = dluts[c][Wl[cur]]
+            if p < 256:
+                raise ValueError("invalid Huffman code")
+            s = p & 0xFF
+            cur += p >> 8
+            if s:
+                v = Wl[cur] >> (16 - s) if cur < nW else 0
+                cur += s
+                preds[c] += v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+            base = i << 6
+            oi_app(base)
+            ov_app(preds[c])
+            k = 1
+            while k < 64 and cur < nW:
+                p = apk[Wl[cur]]
+                if p < 256:
+                    raise ValueError("invalid Huffman code")
+                rs = p & 0xFF
+                cur += p >> 8
+                if rs == 0x00:                                   # EOB
+                    break
+                if rs == 0xF0:                                   # ZRL
+                    k += 16
+                    continue
+                k += rs >> 4
+                s = rs & 0x0F
+                v = Wl[cur] >> (16 - s) if cur < nW else 0
+                cur += s
+                if k > 63:
+                    break
+                oi_app(base + k)
+                ov_app(v if v >= (1 << (s - 1)) else v - (1 << s) + 1)
+                k += 1
+        mcu_done += m
+    zz.ravel()[oi] = ov
 
 
 def _pixels_from_zc(zc_list, sof_comps, qts, h, w, hmax, vmax):

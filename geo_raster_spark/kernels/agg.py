@@ -71,14 +71,6 @@ def _weight_matrix(off: float, scale: float, n_out: int, n_in: int,
     return w, b.astype(np.float64), valid
 
 
-def _offsets(gt_in, gt_out):
-    """(off_y, off_x, scale) from two geotransforms [ref: mod/agg_band.pyx:31-40]."""
-    off_y = (gt_out[3] - gt_in[3]) / gt_in[5]
-    off_x = (gt_out[0] - gt_in[0]) / gt_in[1]
-    scale = gt_out[1] / gt_in[1]
-    return off_y, off_x, scale
-
-
 def mean(dat, off_y, off_x, scale, nodata, rows, cols,
          v_min=None, v_max=None, min_rate=0.1):
     """Area-weighted mean (A1).  [ref: mod/agg_band.pyx:157-265]"""

@@ -226,11 +226,11 @@ def km_minhash_batch(texts, k: int = 5, n_hashes: int = 32) -> np.ndarray:
     ONE sliding-window FNV-1a pass over it, per-doc minima via
     ``minimum.reduceat`` — no per-document Python loop (the round-3 kernel
     ran ~30 interpreter steps per doc; at 72k docs that loop was the
-    dedup-pipeline wall).  Byte-identical to the scalar form
-    (``_km_sig_doc``, kept as the parity oracle — asserted in tests):
-    windows crossing document boundaries are EXCLUDED by a ragged index
-    gather, never by a sentinel (KM variants wrap modulo 2^64, so a
-    sentinel hash could still win a minimum)."""
+    dedup-pipeline wall).  Byte-identical to the per-document form
+    (``tests/oracles.py``, asserted in tests): windows crossing document
+    boundaries are EXCLUDED by a ragged index gather, never by a sentinel
+    (KM variants wrap modulo 2^64, so a sentinel hash could still win a
+    minimum)."""
     prime = np.uint64(0x100000001B3)
     bufs = []
     for t in texts:
@@ -264,22 +264,6 @@ def km_minhash_batch(texts, k: int = 5, n_hashes: int = 32) -> np.ndarray:
     for i in range(n_hashes):
         sig[:, i] = np.minimum.reduceat(h1 + np.uint64(i) * h2, red)
     return sig
-
-
-def _km_sig_doc(text, k: int = 5, n_hashes: int = 32) -> np.ndarray:
-    """Scalar per-document reference of ``km_minhash_batch`` (the round-3
-    kernel verbatim) — kept ONLY as the batch kernel's parity oracle."""
-    prime = np.uint64(0x100000001B3)
-    iarr = np.arange(n_hashes, dtype=np.uint64)
-    b = np.frombuffer(str(text).lower().encode("utf-8"), np.uint8)
-    if len(b) < k:
-        b = np.pad(b, (0, k - len(b)))
-    win = np.lib.stride_tricks.sliding_window_view(b, k)
-    h1 = np.full(len(win), 0xCBF29CE484222325, np.uint64)
-    for j in range(k):
-        h1 = (h1 ^ win[:, j].astype(np.uint64)) * prime
-    h2 = _sm_mix_np(h1) | np.uint64(1)
-    return (h1[:, None] + iarr[None, :] * h2[:, None]).min(axis=0)
 
 
 def minhash_lsh(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -373,28 +357,19 @@ def _est_jaccard(n_hashes: int) -> F.Column:
             / F.lit(float(n_hashes)))
 
 
-def _fnv1a64(data: bytes) -> int:
-    """Deterministic 64-bit FNV-1a (public algorithm) — SCALAR reference.
-    The hot path is ``_fnv1a64_batch``; this stays as its parity oracle
-    (same pattern as jpeg.py's scalar/vectorized pair).  NEVER use Python's
-    builtin ``hash()`` in executor code: string hashing is salted per
-    process (PYTHONHASHSEED), so results would differ across workers."""
-    h = 0xCBF29CE484222325
-    for b in data:
-        h ^= b
-        h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
-
-
 def _fnv1a64_batch(tokens: list) -> np.ndarray:
-    """Vectorized FNV-1a over a batch of byte strings -> uint64 array.
+    """Vectorized 64-bit FNV-1a (public algorithm) over a batch of byte
+    strings -> uint64 array.  NEVER use Python's builtin ``hash()`` in
+    executor code: string hashing is salted per process (PYTHONHASHSEED),
+    so results would differ across workers.
 
     The fold is sequential over BYTE POSITIONS but whole-array over tokens:
     scatter all bytes into a (n_tokens, maxlen) uint8 matrix, then loop
     maxlen times (token lengths, ~5-15) doing uint64 xor/multiply on every
     still-live token at once — the round-2 per-byte-per-token Python loop
     ran len(token) x n_tokens interpreter steps instead.  Byte-identical to
-    ``_fnv1a64`` (test_simhash_vectorized_matches_scalar)."""
+    the per-token form in ``tests/oracles.py``
+    (test_simhash_vectorized_matches_scalar)."""
     n = len(tokens)
     if n == 0:
         return np.zeros(0, dtype=np.uint64)

@@ -17,20 +17,14 @@ from ..synth import CELL_SIZE
 
 
 def with_footprint(images: DataFrame, res: int = DEFAULT_RES,
-                   cell_size: float = CELL_SIZE,
-                   engine: str = "sql") -> DataFrame:
+                   cell_size: float = CELL_SIZE) -> DataFrame:
     """images(image_id, w, h, phash, ...) -> + lon, lat, minx/miny/maxx/maxy,
     cell (DGGS id of the center), gt (GDAL 6-tuple array).
 
-    ``engine='sql'`` (default): SplitMix64 column math, fused into the scan
-    by whole-stage codegen — zero Python, the fastest path.
-    ``engine='pandas'``: the same derivation as a vectorized Arrow batch
-    UDF over the NumPy twins (``synth.image_meta`` / ``dggs``) — the
-    north-star "pandas UDFs compute cell IDs" form, kept for sessions where
-    wrapping long arithmetic is unavailable (ANSI mode pinned on) and as a
-    living proof the two paths agree (asserted in tests)."""
-    if engine == "pandas":
-        return _with_footprint_pandas(images, res, cell_size)
+    SplitMix64 column math, fused into the scan by whole-stage codegen;
+    bit-identical to the NumPy twins ``synth.image_meta`` / ``dggs``
+    (asserted in tests).  Needs ``spark.sql.ansi.enabled=false`` for the
+    wrapping long multiply (see ``functions``)."""
     lon = gf.image_lon(F.col("phash"))
     lat = gf.image_lat(F.col("phash"))
     df = images.withColumn("lon", lon).withColumn("lat", lat)
@@ -42,34 +36,3 @@ def with_footprint(images: DataFrame, res: int = DEFAULT_RES,
         F.col("minx"), F.lit(cell_size), F.lit(0.0),
         F.col("maxy"), F.lit(0.0), F.lit(-cell_size)))
     return df
-
-
-def _with_footprint_pandas(images: DataFrame, res: int, cell_size: float) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in images.schema.fields]
-        + ["lon double", "lat double", "minx double", "miny double",
-           "maxx double", "maxy double", "cell long", "gt array<double>"])
-
-    def derive(batches):
-        from geo_raster_spark import dggs as dg
-        from geo_raster_spark import synth as sy
-
-        for pdf in batches:
-            ph = pdf["phash"].to_numpy(np.int64).astype(np.uint64)
-            lon = -180.0 + 360.0 * sy._unit(ph, 0xA5A5A5A5)
-            lat = -60.0 + 120.0 * sy._unit(ph, 0x5A5A5A5A)
-            hw = pdf["w"].to_numpy(np.float64) * cell_size / 2
-            hh = pdf["h"].to_numpy(np.float64) * cell_size / 2
-            out = pdf.copy()
-            out["lon"], out["lat"] = lon, lat
-            out["minx"], out["maxx"] = lon - hw, lon + hw
-            out["miny"], out["maxy"] = lat - hh, lat + hh
-            out["cell"] = dg.latlng_to_cell(lon, lat, res)
-            out["gt"] = [[mx, cell_size, 0.0, my, 0.0, -cell_size]
-                         for mx, my in zip(out["minx"], out["maxy"])]
-            yield out
-
-    return images.mapInPandas(derive, schema=schema)

@@ -28,23 +28,6 @@ from .. import dggs, geometry
 from ..dggs import DEFAULT_RES
 
 
-def zone_cover_df(spark, zones_pdf: pd.DataFrame, res: int = DEFAULT_RES) -> DataFrame:
-    """(cell, zone_id, full) covering pairs — driver-side cover of the small
-    build side (the reference's per-footprint spatial index role).
-
-    ``full`` marks cells wholly inside the zone: candidates landing there
-    are accepted WITHOUT the exact refine (most of the interior at res 7),
-    so the Python ray cast only touches boundary cells."""
-    rows = []
-    for _, z in zones_pdf.iterrows():
-        ring = geometry.wkb_to_ring(z["geometry"])
-        cells, full = dggs.polygon_cover_labeled(ring, res)
-        for c, f in zip(cells, full):
-            rows.append((int(c), int(z["zone_id"]), bool(f)))
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["cell", "zone_id", "full"]))
-
-
 def _ring_edges_literal(rings) -> list:
     """Ring part(s) -> flat list of edge dicts for an array<struct> literal.
 
@@ -189,10 +172,3 @@ def pip_join(points: DataFrame, zones_pdf: pd.DataFrame,
                      .withColumnRenamed("name", "zone_name")
         refined = refined.join(F.broadcast(names), "zone_id", "left")
     return refined
-
-
-def pip_count_by_zone(points: DataFrame, zones_pdf: pd.DataFrame,
-                      res: int = DEFAULT_RES) -> DataFrame:
-    """Convenience: images-per-zone counts (the flagship reduce)."""
-    j = pip_join(points, zones_pdf, res=res, keep_zone_name=False)
-    return j.groupBy("zone_id").agg(F.count("*").alias("n_images"))

@@ -163,11 +163,7 @@ def lsh_topk(emb: DataFrame, probe_vec, k: int = 10, dim: int | None = None,
 
     bucketed = with_lsh_bucket(emb, dim, n_planes, seed, vec_col, center=mu)
     cand = bucketed.where(F.col("bucket").isin(list(cand_buckets)))
-    p = probe_literal(probe_vec)
-    scored = cand.select(
-        id_col,
-        F.round(cosine_sim(F.col(vec_col).cast("array<double>"), p), 8).alias("cosine"))
-    return _topk(scored, k, id_col)
+    return cosine_topk(cand, probe_vec, k, vec_col, id_col)
 
 
 def build_lsh_index(emb: DataFrame, dim: int, path: str,
@@ -224,12 +220,8 @@ def lsh_topk_indexed(spark, path: str, probe_vec, k: int = 10,
     cand_buckets = _multiprobe_buckets(b0, n_planes, multiprobe_bits)
     cand = (spark.read.parquet(apath)
                  .where(F.col("bucket").isin([int(b) for b in cand_buckets])))
-    p = probe_literal(probe_vec)
-    scored = cand.select(
-        id_col,
-        F.round(cosine_sim(F.col(vec_col).cast("array<double>"), p), 8).alias("cosine"))
-    return _eager_if_old_view(_topk(scored, k, id_col), apath,
-                              f"{path}/assignments")
+    return _eager_if_old_view(cosine_topk(cand, probe_vec, k, vec_col, id_col),
+                              apath, f"{path}/assignments")
 
 
 def fit_centroids(emb: DataFrame, dim: int, k: int = 16, iters: int = 8,
@@ -281,11 +273,7 @@ def ivf_topk(emb: DataFrame, probe_vec, k: int = 10, dim: int | None = None,
     order = np.argsort(((C - probe_vec) ** 2).sum(1))[:nprobe]
     cand = with_ivf_bucket(emb, C, vec_col).where(
         F.col("ivf").isin([int(i) for i in order]))
-    p = probe_literal(probe_vec)
-    scored = cand.select(
-        id_col,
-        F.round(cosine_sim(F.col(vec_col).cast("array<double>"), p), 8).alias("cosine"))
-    return _topk(scored, k, id_col)
+    return cosine_topk(cand, probe_vec, k, vec_col, id_col)
 
 
 def build_ivf_index(emb: DataFrame, dim: int, path: str,
@@ -647,12 +635,8 @@ def ivf_topk_indexed(spark, path: str, probe_vec, k: int = 10,
     order = np.argsort(((C - probe_vec) ** 2).sum(1))[:nprobe]
     cand = (spark.read.parquet(apath)
                  .where(F.col("ivf").isin([int(i) for i in order])))
-    p = probe_literal(probe_vec)
-    scored = cand.select(
-        id_col,
-        F.round(cosine_sim(F.col(vec_col).cast("array<double>"), p), 8).alias("cosine"))
-    return _eager_if_old_view(_topk(scored, k, id_col), apath,
-                              f"{path}/assignments")
+    return _eager_if_old_view(cosine_topk(cand, probe_vec, k, vec_col, id_col),
+                              apath, f"{path}/assignments")
 
 
 def knn_pairs_exact(emb: DataFrame, dim: int, n_planes: int = 8,

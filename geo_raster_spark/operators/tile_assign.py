@@ -50,7 +50,9 @@ def assign_tiles(df: DataFrame, image_size: int = 100,
 
 def tile_grid_df(spark, grid: TileGrid, ext=None) -> DataFrame:
     """G1: the tile grid as a generated DataFrame — ``spark.range`` + column
-    math, zero data read, fully parallel."""
+    math, zero data read, fully parallel.  ``ext`` keeps the tiles whose
+    haloed extent intersects it; an extent reaching past ±p wraps onto the
+    far side of the grid, as in ``TileGrid.list_tiles``."""
     n = grid.n_cols * grid.n_rows
     df = (spark.range(0, n)
           .withColumn("tile_col", (F.col("id") % grid.n_cols).cast("int"))
@@ -65,7 +67,11 @@ def tile_grid_df(spark, grid: TileGrid, ext=None) -> DataFrame:
           .withColumn("tminy", F.col("tmaxy") - F.lit(s))
           .withColumn("tile_tag", gf.tile_tag(F.col("tile_col"), F.col("tile_row"))))
     if ext is not None:
-        df = df.where((F.col("tminx") <= ext[2]) & (F.col("tmaxx") >= ext[0])
+        # a tile matches the extent or its copy shifted by ±2p (the wrapped
+        # columns of list_tiles' col % n_cols)
+        def x_hit(k):
+            return (F.col("tminx") <= ext[2] + k) & (F.col("tmaxx") >= ext[0] + k)
+        df = df.where((x_hit(-2 * p) | x_hit(0.0) | x_hit(2 * p))
                       & (F.col("tminy") <= ext[3]) & (F.col("tmaxy") >= ext[1]))
     return df
 

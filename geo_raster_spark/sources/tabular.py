@@ -38,15 +38,6 @@ def list_files(spark: SparkSession, glob_path: str,
     return df
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
-                  partition_by: list | None = None) -> None:
-    """S2/S8 role: columnar sink; partition spec = the catalog's pruning key."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def read_jdbc(spark: SparkSession, url: str, table: str,
               partition_column: str | None = None,
               lower_bound=None, upper_bound=None, num_partitions: int = 8,

@@ -62,6 +62,41 @@ def windowed_event_counts(spark: SparkSession, events_path: str,
                      F.col("w.end").alias("w_end"), "event_type", "n", "sum_value"))
 
 
+def _admission_stream(spark: SparkSession, src_path: str, schema: str,
+                      out_path: str, checkpoint_path: str, admit):
+    """AvailableNow stream shared by the admission-control operators: each
+    non-empty micro-batch of newly-arrived parquet files runs
+    ``admit(batch_df, sink)``, a ``dedup.incremental_*`` call that hands
+    its accepted rows to ``sink`` BEFORE its store append (the
+    ``out_sink`` contract).  Returns the StreamingQuery."""
+    stream = spark.readStream.schema(schema).parquet(src_path)
+
+    def process_batch(batch_df, batch_id: int):
+        if batch_df.isEmpty():
+            return
+
+        def sink(accepted):
+            # idempotent per-batch delivery: a replayed batch overwrites
+            # its own subdirectory instead of losing rows to the
+            # already-resident rejection or duplicating them.  An EMPTY
+            # accepted set never overwrites: a replay of a fully-committed
+            # batch recomputes empty (its ids are now resident) and must
+            # not erase the rows it delivered before the crash.
+            if accepted.limit(1).count() == 0:
+                return
+            (accepted.withColumn("batch_id", F.lit(batch_id))
+                     .write.mode("overwrite")
+                     .parquet(f"{out_path}/batch={batch_id}"))
+
+        admit(batch_df, sink)
+
+    return (stream.writeStream
+                  .foreachBatch(process_batch)
+                  .option("checkpointLocation", checkpoint_path)
+                  .trigger(availableNow=True)
+                  .start())
+
+
 def streaming_dedup_admission(spark: SparkSession, docs_path: str,
                               store_path: str, out_path: str,
                               checkpoint_path: str,
@@ -85,37 +120,12 @@ def streaming_dedup_admission(spark: SparkSession, docs_path: str,
     # readStream schema fills ABSENT columns with NULLs rather than
     # raising, so a mismatched default would silently dedup nothing
     schema = schema or f"{id_col} long, {text_col} string"
-    stream = spark.readStream.schema(schema).parquet(docs_path)
-
-    def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
-
-        def sink(accepted):
-            # idempotent per-batch delivery, executed BEFORE the store
-            # append (incremental_dedup's out_sink contract): a replayed
-            # batch overwrites its own subdirectory instead of losing
-            # rows to the already-resident rejection or duplicating
-            # them.  An EMPTY accepted set never overwrites: a replay of
-            # a fully-committed batch recomputes empty (its ids are now
-            # resident) and must not erase the rows it delivered before
-            # the crash.
-            if accepted.limit(1).count() == 0:
-                return
-            (accepted.withColumn("batch_id", F.lit(batch_id))
-                     .write.mode("overwrite")
-                     .parquet(f"{out_path}/batch={batch_id}"))
-
-        dedup.incremental_dedup(
+    return _admission_stream(
+        spark, docs_path, schema, out_path, checkpoint_path,
+        lambda batch_df, sink: dedup.incremental_dedup(
             spark, store_path, batch_df, text_col=text_col,
             id_col=id_col, jaccard_threshold=jaccard_threshold,
-            out_sink=sink)
-
-    return (stream.writeStream
-                  .foreachBatch(process_batch)
-                  .option("checkpointLocation", checkpoint_path)
-                  .trigger(availableNow=True)
-                  .start())
+            out_sink=sink))
 
 
 def streaming_phash_admission(spark: SparkSession, images_path: str,
@@ -137,25 +147,8 @@ def streaming_phash_admission(spark: SparkSession, images_path: str,
     from ..operators import dedup
 
     schema = schema or f"{id_col} long, {phash_col} long"
-    stream = spark.readStream.schema(schema).parquet(images_path)
-
-    def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
-
-        def sink(accepted):
-            if accepted.limit(1).count() == 0:
-                return
-            (accepted.withColumn("batch_id", F.lit(batch_id))
-                     .write.mode("overwrite")
-                     .parquet(f"{out_path}/batch={batch_id}"))
-
-        dedup.incremental_phash_dedup(
+    return _admission_stream(
+        spark, images_path, schema, out_path, checkpoint_path,
+        lambda batch_df, sink: dedup.incremental_phash_dedup(
             spark, store_path, batch_df, id_col=id_col,
-            phash_col=phash_col, max_bucket=max_bucket, out_sink=sink)
-
-    return (stream.writeStream
-                  .foreachBatch(process_batch)
-                  .option("checkpointLocation", checkpoint_path)
-                  .trigger(availableNow=True)
-                  .start())
+            phash_col=phash_col, max_bucket=max_bucket, out_sink=sink))

@@ -89,28 +89,3 @@ def streaming_sessionize(spark: SparkSession, events_path: str,
                     .option("checkpointLocation", checkpoint_path)
                     .trigger(availableNow=True)
                     .start())
-
-
-def sessionize_oracle(events_pdf: pd.DataFrame, gap_sec: float = 1800.0) -> pd.DataFrame:
-    """NumPy batch oracle: CLOSED sessions only (a session is closed when a
-    later event of the same user follows it by more than the gap)."""
-    gap_us = int(gap_sec * 1_000_000)
-    rows = []
-    for uid, g in events_pdf.groupby("user_id"):
-        ts = np.sort(g["ts"].to_numpy("datetime64[us]").astype(np.int64))
-        s0 = s1 = int(ts[0])
-        n = 1
-        for t in ts[1:]:
-            t = int(t)
-            if t - s1 > gap_us:
-                rows.append((int(uid), s0, s1, n))
-                s0, s1, n = t, t, 1
-            else:
-                s1, n = t, n + 1
-        # trailing session stays open — not emitted
-    out = pd.DataFrame(rows, columns=["user_id", "s0", "s1", "n_events"])
-    return pd.DataFrame({
-        "user_id": out["user_id"],
-        "session_start": pd.to_datetime(out["s0"], unit="us"),
-        "session_end": pd.to_datetime(out["s1"], unit="us"),
-        "n_events": out["n_events"].astype(np.int32)})

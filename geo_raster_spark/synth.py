@@ -114,10 +114,6 @@ def image_pixels_rgb(i: int, w: int, h: int, phash_u64: int) -> np.ndarray:
     return np.clip(np.stack([r, g, b], axis=-1), 0, 255).astype(np.uint8)
 
 
-def _caption(i, tag):
-    return f"synthetic scene {i} tile {tag}"
-
-
 def images_pandas(n: int, start: int = 0, with_bytes: bool = True) -> pd.DataFrame:
     """Driver-side batch of ``n`` image rows starting at index ``start``.
 
@@ -219,8 +215,3 @@ def zones_pandas(n_zones: int = 64, hot: bool = False, seed: int = 42) -> pd.Dat
             "crs": "EPSG:4326",
         })
     return pd.DataFrame(rows)
-
-
-def zones_df(spark, n_zones: int = 64, hot: bool = False, seed: int = 42):
-    pdf = zones_pandas(n_zones, hot, seed)
-    return spark.createDataFrame(pdf)

@@ -55,8 +55,15 @@ def test_components_random_graph_vs_union_find(spark):
     # a long chain forces many hops (diameter >> log n)
     pairs += [(1000 + i, 1000 + i + 1) for i in range(40)]
     want = _union_find(pairs)
-    got = _cc_dict(spark, pairs)
+    comp = cc.connected_components(
+        spark.createDataFrame(pd.DataFrame(pairs, columns=["id_a", "id_b"])))
+    got = {r["node"]: r["root"] for r in comp.collect()}
     assert got == want
+    # component_stats: members per root == the union-find component sizes
+    sizes = {r["root"]: r["n_members"]
+             for r in cc.component_stats(comp).collect()}
+    comp.unpersist()
+    assert sizes == Counter(want.values())
 
 
 def test_components_string_ids_and_empty(spark):

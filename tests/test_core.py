@@ -337,6 +337,41 @@ def test_clip_convex():
     assert geometry.clip_convex(tri, geometry.bbox_to_ring((50, 50, 60, 60))) is None
 
 
+def test_bbox_helpers_match_interval_arithmetic():
+    """bbox_contains_point / intersect / union / buffer against brute-force
+    membership of lattice points in the closed x and y intervals."""
+    rng = np.random.default_rng(5)
+    xs, ys = np.meshgrid(np.arange(-12, 12.5, 0.5), np.arange(-12, 12.5, 0.5))
+    xs, ys = xs.ravel(), ys.ravel()
+
+    def inside(b):
+        return (b[0] <= xs) & (xs <= b[2]) & (b[1] <= ys) & (ys <= b[3])
+
+    for _ in range(40):
+        a, b = [tuple(np.concatenate([np.sort(rng.integers(-8, 9, 2)),
+                                      np.sort(rng.integers(-8, 9, 2))])
+                      [[0, 2, 1, 3]].astype(float)) for _ in range(2)]
+        d = float(rng.integers(0, 3)) / 2
+        got = np.array([geometry.bbox_contains_point(a, x, y)
+                        for x, y in zip(xs, ys)])
+        np.testing.assert_array_equal(got, inside(a))
+        i = geometry.bbox_intersect(a, b)
+        if geometry.bbox_intersects(a, b):
+            np.testing.assert_array_equal(inside(i), inside(a) & inside(b))
+        else:
+            assert i[0] > i[2] or i[1] > i[3]
+        u = geometry.bbox_union(a, b)
+        both = inside(a) | inside(b)
+        assert inside(u)[both].all()
+        assert u == (xs[both].min(), ys[both].min(),
+                     xs[both].max(), ys[both].max())
+        # buffer = points within Chebyshev distance d of the box
+        dx = np.maximum(np.maximum(a[0] - xs, xs - a[2]), 0)
+        dy = np.maximum(np.maximum(a[1] - ys, ys - a[3]), 0)
+        np.testing.assert_array_equal(inside(geometry.bbox_buffer(a, d)),
+                                      np.maximum(dx, dy) <= d)
+
+
 def test_rings_intersect():
     a = geometry.bbox_to_ring((0, 0, 2, 2))
     assert geometry.rings_intersect(a, geometry.bbox_to_ring((1, 1, 3, 3)))

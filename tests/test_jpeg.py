@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 
 from geo_raster_spark import codecs, jpeg
+from tests.oracles import decode_scalar, encode_scalar, entropy_scalar
 
 
 def _noisy(h, w, seed):
@@ -117,9 +118,9 @@ def test_color_scalar_vector_parity():
     reference byte-for-byte / pixel-for-pixel on color streams."""
     img = _rgb_fixture(40, 48, seed=4)
     b = jpeg.encode(img, 92)
-    assert b == jpeg.encode(img, 92, _scalar=True)
+    assert b == encode_scalar(img, 92)
     dec = jpeg.decode(b)
-    np.testing.assert_array_equal(dec, jpeg.decode(b, _scalar=True))
+    np.testing.assert_array_equal(dec, decode_scalar(b))
 
 
 def test_color_flat_image_roundtrips_near_exact():
@@ -165,10 +166,9 @@ def test_restart_intervals_roundtrip_and_parity():
             assert b"\xFF\xDD" in b                       # DRI present
             if ri < 60:
                 assert b"\xFF\xD0" in b                   # RST0 emitted
-            assert b == jpeg.encode(img, 92, _scalar=True,
-                                    restart_interval=ri)
+            assert b == encode_scalar(img, 92, restart_interval=ri)
             d = jpeg.decode(b)
-            np.testing.assert_array_equal(d, jpeg.decode(b, _scalar=True))
+            np.testing.assert_array_equal(d, decode_scalar(b))
             np.testing.assert_array_equal(d, plain)
 
 
@@ -183,9 +183,9 @@ def test_subsampled_roundtrip_and_parity():
                        ((xx + yy) * 2) % 256], -1).astype(np.uint8)
     for ss, floor in [("444", 50.0), ("422", 46.0), ("420", 43.0)]:
         b = jpeg.encode(smooth, 92, subsampling=ss)
-        assert b == jpeg.encode(smooth, 92, subsampling=ss, _scalar=True)
+        assert b == encode_scalar(smooth, 92, subsampling=ss)
         d = jpeg.decode(b)
-        np.testing.assert_array_equal(d, jpeg.decode(b, _scalar=True))
+        np.testing.assert_array_equal(d, decode_scalar(b))
         assert d.shape == smooth.shape
         assert codecs.psnr(smooth, d) >= floor, ss
     # each sampling shrinks the payload
@@ -414,7 +414,9 @@ def test_baseline_noninterleaved_scans_decode():
             zz = zzs[c].astype(np.int64)
             # sequential DC prediction within the single-component scan
             out += jpeg._sos_hdr([(cid, 0, 0)], 0, 63, 0, 0)
-            out += jpeg._encode_scan(zz, [0], restart, True)
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(jpeg, "_entropy_vector", entropy_scalar)
+                out += jpeg._encode_scan(zz, [0], restart)
         return bytes(out + b"\xFF\xD9")
 
     want = jpeg.decode(jpeg.encode(rgb, q))

@@ -214,6 +214,15 @@ def test_metrics():
     mbe, s2d = stats.cal_mbe(x, y)
     assert abs(mbe - (-0.0666666666)) < 1e-6
     assert 0.0 <= stats.cal_error_bound(x, y, 2.0) <= 1.0
+    # on the identity line RMSDs is 0 and RMSDu the mean-square residual
+    rmsd, rmsd_s, rmsd_u = stats.cal_rmsds(x, y, 1.0, 0.0)
+    assert rmsd_s == 0.0 and abs(rmsd_u - np.sqrt(0.06 / 3)) < 1e-12
+    assert rmsd == rmsd_u
+    # line y = 2x + 1 -> p = (3, 5, 7): RMSDs^2 = 29/3, RMSDu^2 = 27.66/3
+    rmsd, rmsd_s, rmsd_u = stats.cal_rmsds(x, y, 2.0, 1.0)
+    assert abs(rmsd_s - np.sqrt(29.0 / 3)) < 1e-12
+    assert abs(rmsd_u - np.sqrt(27.66 / 3)) < 1e-12
+    assert abs(rmsd - np.sqrt(29.0 / 3 + 27.66 / 3)) < 1e-12
 
 
 def test_estimate_levels():

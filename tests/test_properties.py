@@ -160,6 +160,7 @@ def test_subsampled_color_roundtrip_any_image(seed):
     decode, and a CONSTANT-chroma image loses nothing to subsampling
     (its decode matches the 4:4:4 decode exactly)."""
     from geo_raster_spark import jpeg
+    from tests.oracles import decode_scalar
     rng = np.random.default_rng(seed)
     h = int(rng.integers(1, 40))
     w = int(rng.integers(1, 40))
@@ -168,7 +169,7 @@ def test_subsampled_color_roundtrip_any_image(seed):
     b = jpeg.encode(rgb, 90, subsampling=ss)
     d = jpeg.decode(b)
     assert d.shape == rgb.shape and d.dtype == np.uint8
-    np.testing.assert_array_equal(d, jpeg.decode(b, _scalar=True))
+    np.testing.assert_array_equal(d, decode_scalar(b))
     # constant-chroma content loses nothing to subsampling itself: the
     # decode matches 4:4:4 to within the +-1 quantization jitter (the
     # different pad-to-MCU shapes reorder einsum float sums, which can

@@ -5,7 +5,7 @@ The optimizations must be invisible to results:
   ``groupBy().applyInPandas`` exactly — including when one group spans
   multiple Arrow batches (the buffering path).
 - ``dedup.km_minhash_batch`` (whole-batch vectorized KM minhash) must be
-  byte-identical to the retained scalar reference ``_km_sig_doc``.
+  byte-identical to the per-document reference ``oracles.km_sig_doc``.
 """
 
 import numpy as np
@@ -74,12 +74,13 @@ def test_grouped_stream_multi_key_and_empty_results(spark):
     "x" * 500, "the quick brown fox " * 40,
 ])
 def test_km_minhash_batch_matches_scalar(text):
-    from geo_raster_spark.operators.dedup import _km_sig_doc, km_minhash_batch
+    from geo_raster_spark.operators.dedup import km_minhash_batch
+    from tests.oracles import km_sig_doc
 
     batch = km_minhash_batch([text, "padding doc", text + "!"])
-    assert np.array_equal(batch[0], _km_sig_doc(text))
-    assert np.array_equal(batch[1], _km_sig_doc("padding doc"))
-    assert np.array_equal(batch[2], _km_sig_doc(text + "!"))
+    assert np.array_equal(batch[0], km_sig_doc(text))
+    assert np.array_equal(batch[1], km_sig_doc("padding doc"))
+    assert np.array_equal(batch[2], km_sig_doc(text + "!"))
 
 
 def test_grouped_stream_keeps_null_group_keys(spark):
@@ -252,7 +253,8 @@ def test_boundcrs_scale_mismatch_names_the_heuristic():
 def test_km_minhash_batch_fuzz():
     import random
 
-    from geo_raster_spark.operators.dedup import _km_sig_doc, km_minhash_batch
+    from geo_raster_spark.operators.dedup import km_minhash_batch
+    from tests.oracles import km_sig_doc
 
     rng = random.Random(20260822)
     alphabet = "abcdefgh ijklmnop XYZ0123 äöü"
@@ -261,4 +263,4 @@ def test_km_minhash_batch_fuzz():
              for _ in range(200)]
     batch = km_minhash_batch(texts)
     for i, t in enumerate(texts):
-        assert np.array_equal(batch[i], _km_sig_doc(t)), i
+        assert np.array_equal(batch[i], km_sig_doc(t)), i

@@ -117,6 +117,28 @@ def test_jdbc_roundtrip_partitioned(spark):
     assert out["v"].tolist() == pdf["v"].tolist()
 
 
+def test_tabular_csv_and_file_listing(spark, tmp_path):
+    """S9 header CSV with type inference; S15 listing skips the zero-size
+    file and applies the regex filter."""
+    from geo_raster_spark.sources import tabular
+    (tmp_path / "t.csv").write_text("k;x;name\n1;0.5;a\n2;1.5;b\n")
+    df = tabular.read_csv(spark, str(tmp_path / "t.csv"), sep=";")
+    assert dict(df.dtypes) == {"k": "int", "x": "double", "name": "string"}
+    assert [tuple(r) for r in df.orderBy("k").collect()] == \
+        [(1, 0.5, "a"), (2, 1.5, "b")]
+
+    d = tmp_path / "files"
+    d.mkdir()
+    for name, size in [("a.tif", 3), ("b.tif", 0), ("c.png", 5)]:
+        (d / name).write_bytes(b"x" * size)
+
+    def names(**kw):
+        return sorted(r["path"].rsplit("/", 1)[1] for r in
+                      tabular.list_files(spark, str(d / "*"), **kw).collect())
+    assert names() == ["a.tif", "c.png"]
+    assert names(pattern=r"\.tif$") == ["a.tif"]
+
+
 # --- dedup ------------------------------------------------------------------
 
 def test_exact_dedup_roundtrip(spark):
@@ -167,11 +189,12 @@ def test_simhash_vectorized_matches_scalar(spark, sf_dir):
     FNV-1a reference — both the token hashes and full document signatures
     (round-3 vectorization must not change any signature)."""
     from geo_raster_spark.operators import dedup
+    from tests.oracles import fnv1a64
     # token-hash parity incl. empty + unicode + long tokens
     toks = [b"", b"a", b"hello", "héllo wörld".encode("utf-8"),
             b"x" * 200, b"the", b"splitmix"]
     got = dedup._fnv1a64_batch(toks)
-    want = np.array([dedup._fnv1a64(t) for t in toks], dtype=np.uint64)
+    want = np.array([fnv1a64(t) for t in toks], dtype=np.uint64)
     np.testing.assert_array_equal(got, want)
 
     # full signature parity vs a scalar per-doc recompute on real docs
@@ -181,7 +204,7 @@ def test_simhash_vectorized_matches_scalar(spark, sf_dir):
         .set_index("doc_id")["simhash"]
     for _, r in pdf.iterrows():
         toks = str(r["text"]).lower().split()
-        hs = np.array([dedup._fnv1a64(w.encode("utf-8")) for w in toks],
+        hs = np.array([fnv1a64(w.encode("utf-8")) for w in toks],
                       dtype=np.uint64)
         bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)[None, :])
                 & np.uint64(1)).astype(np.int64)

@@ -23,11 +23,13 @@ def images_fp(spark):
 
 
 def test_footprint_matches_numpy_twins(images_fp):
-    pdf = images_fp.orderBy("image_id").limit(200).toPandas()
-    m = synth.image_meta(np.arange(200))
-    np.testing.assert_allclose(pdf["lon"], m["lon"], atol=1e-12)
-    np.testing.assert_allclose(pdf["lat"], m["lat"], atol=1e-12)
-    np.testing.assert_allclose(pdf["minx"], m["minx"], atol=1e-12)
+    """The column-math derivation equals the NumPy twins bit-for-bit (same
+    SplitMix64, same cell packing) on every fixture row."""
+    pdf = images_fp.orderBy("image_id").toPandas()
+    m = synth.image_meta(np.arange(N))
+    np.testing.assert_array_equal(pdf["lon"].values, m["lon"])
+    np.testing.assert_array_equal(pdf["lat"].values, m["lat"])
+    np.testing.assert_array_equal(pdf["minx"].values, m["minx"])
     assert (pdf["cell"].values == dggs.latlng_to_cell(m["lon"], m["lat"])).all()
 
 
@@ -239,6 +241,37 @@ def test_tile_assign_dateline_wrap(spark):
     assert 359 in cols_a and 0 in cols_a
 
 
+def test_salted_join_equals_plain_join(spark):
+    """with_salt on the skewed probe side + explode_salt on the build side
+    join to exactly the plain equi-join's rows."""
+    probe = spark.createDataFrame(pd.DataFrame({
+        "key": ["hot"] * 200 + ["warm"] * 20 + ["cold", "none"],
+        "i": np.arange(222)}))
+    build = spark.createDataFrame(pd.DataFrame({
+        "key": ["hot", "warm", "cold"], "v": [1, 2, 3]}))
+    exploded = tile_assign.explode_salt(build, buckets=4)
+    assert sorted((r["key"], r["salt"]) for r in exploded.collect()) == \
+        [(k, b) for k in ("cold", "hot", "warm") for b in range(4)]
+    salted = (tile_assign.with_salt(probe, "key", buckets=4)
+              .join(exploded, ["key", "salt"]).select("i", "key", "v"))
+    plain = probe.join(build, "key").select("i", "key", "v")
+    got = sorted(salted.collect())
+    assert len(got) == 221 and got == sorted(plain.collect())
+
+
+def test_tile_grid_df_matches_list_tiles_across_dateline(spark):
+    """The generated tile grid filtered by an extent equals
+    ``TileGrid.list_tiles``, including the wrapped tiles of an extent that
+    crosses ±180°, and the whole grid when no extent is given."""
+    g = TileGrid(image_size=10, cell_size=0.5)
+    for ext in [(175.0, -5.0, 185.0, 5.0), (-185.0, 0.0, -170.0, 3.0),
+                (-10.0, -5.0, 10.0, 5.0), None]:
+        rows = tile_assign.tile_grid_df(spark, g, ext=ext) \
+            .select("tile_col", "tile_row").collect()
+        assert len(rows) == len(set(rows)), ext
+        assert set(map(tuple, rows)) == set(g.list_tiles(ext)), ext
+
+
 def test_pip_join_dateline_zone(spark):
     """A zone polygon crossing ±180° matches points on BOTH sides of the
     dateline, in both refine engines."""
@@ -322,21 +355,6 @@ def test_zonal_stats_matches_kernel(spark):
         np.testing.assert_allclose(got.loc[zid, "rng"], rng, rtol=1e-12)
         assert got.loc[zid, "n_pixels"] == cnt
     assert set(got.index) == set(agg.keys())
-
-
-def test_footprint_pandas_engine_agrees_with_sql(spark):
-    """The Arrow-UDF derivation must equal the column-math derivation
-    bit-for-bit (same SplitMix64, same cell packing)."""
-    imgs = flagship.footprint_input(spark, 500, 4)
-    a = footprint.with_footprint(imgs, engine="sql") \
-        .select("image_id", "lon", "lat", "minx", "maxy", "cell") \
-        .orderBy("image_id").toPandas()
-    b = footprint.with_footprint(imgs, engine="pandas") \
-        .select("image_id", "lon", "lat", "minx", "maxy", "cell") \
-        .orderBy("image_id").toPandas()
-    assert (a["cell"].values == b["cell"].values).all()
-    np.testing.assert_array_equal(a["lon"].values, b["lon"].values)
-    np.testing.assert_array_equal(a["minx"].values, b["minx"].values)
 
 
 def test_tile_cut_salted_equals_unsalted(spark):
@@ -479,6 +497,29 @@ def test_tile_cut_salted_arbitrary_ids(spark):
     tag = max(plain, key=lambda t: plain[t][1])
     got = codecs.decode_png(plain[tag][0])
     assert (got == 80).any()
+
+
+def test_write_catalog_partitions_by_cell_prefix(spark, tmp_path):
+    """write_catalog lays rows out under one ``cell_prefix=`` directory per
+    coarse DGGS cell of the footprint center."""
+    from geo_raster_spark.sources import catalog as cat
+    entries = [{"image_id": f"i{k}", "minx": x - 1, "miny": y - 1,
+                "maxx": x + 1, "maxy": y + 1}
+               for k, (x, y) in enumerate([(10, 10), (11, 11), (-120, 40),
+                                           (150, -30)])]
+    out = str(tmp_path / "cat")
+    cat.write_catalog(cat.catalog_from_list(spark, entries), out,
+                      cell_prefix_res=2)
+    lon = np.array([10.0, 11.0, -120.0, 150.0])
+    lat = np.array([10.0, 11.0, 40.0, -30.0])
+    want = dggs.latlng_to_cell(lon, lat, 2)
+    assert want[0] == want[1] and len(set(want)) == 3
+    dirs = {p.name for p in (tmp_path / "cat").iterdir()
+            if p.name.startswith("cell_prefix=")}
+    assert dirs == {f"cell_prefix={c}" for c in want}
+    back = {r["image_id"]: r["cell_prefix"]
+            for r in spark.read.parquet(out).collect()}
+    assert back == {f"i{k}": int(c) for k, c in enumerate(want)}
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):

@@ -58,6 +58,7 @@ def test_stateful_sessionize_across_batches(spark, tmp_path, sf_dir):
     in the state store across micro-batches (a session split over two files
     closes exactly once), and closed sessions must equal the NumPy oracle."""
     from geo_raster_spark.streaming import stateful
+    from tests.oracles import sessionize_oracle
 
     src = str(tmp_path / "events")
     out = str(tmp_path / "sessions")
@@ -80,7 +81,7 @@ def test_stateful_sessionize_across_batches(spark, tmp_path, sf_dir):
 
     got = (spark.read.parquet(out).toPandas()
            .sort_values(["user_id", "session_start"]).reset_index(drop=True))
-    want = (stateful.sessionize_oracle(pdf, gap_sec=1800)
+    want = (sessionize_oracle(pdf, gap_sec=1800)
             .sort_values(["user_id", "session_start"]).reset_index(drop=True))
     assert len(got) == len(want)
     assert (got["user_id"].values == want["user_id"].values).all()

@@ -48,13 +48,28 @@ def test_burn_band_clamps_and_alpha():
     out = viz.burn_band(rgba, ref, ref_nodata=0, offset=250)
     assert out[0, 0, 0] == 50 and out[0, 1, 0] == 0
     assert out[3, 0, 1] == 0  # nodata -> alpha 0
+    # alpha from a value range: (ref - 100) * 255 / 200, clamped; nodata 0
+    out = viz.burn_transparency(rgba, ref, 100, 300, ref_nodata=0)
+    assert out[3].tolist() == [[255, 0], [191, 0]]
+    np.testing.assert_array_equal(out[:3], rgba[:3])
+    assert rgba[3].tolist() == [[255, 255], [255, 255]]  # input untouched
 
 
-def test_convert_qa_precedence():
+def test_convert_qa_precedence(spark):
     # invalid bit wins over everything; water = bit 0x800 NOT set
     d = np.array([[0x1, 0x410, 0x2300, 0x800, 0x0]], dtype=np.int16)
     out = viz.convert_qa(d)
     assert out.tolist() == [[9, 3, 2, 0, 1]]
+    # the column twin decodes each bit like a NumPy shift-and-mask
+    from geo_raster_spark import functions as gf
+    qa = [int(v) for v in d.ravel()] + [-1, 0x7FFF]
+    bits = [0, 4, 8, 9, 10, 11, 13, 15]
+    df = spark.createDataFrame([(v,) for v in qa], "qa short")
+    got = np.array(df.select(*[gf.qa_decode(df["qa"], b).alias(f"b{b}")
+                               for b in bits]).collect())
+    q = np.array(qa, np.int16).astype(np.int64)
+    want = np.stack([(q >> b) & 1 for b in bits], axis=1)
+    np.testing.assert_array_equal(got, want)
 
 
 def test_from_fmask_roundtrip():
